@@ -3,10 +3,11 @@ package graft.app
 import java.io.OutputStreamWriter
 import java.net.Socket
 import java.nio.charset.StandardCharsets
+import java.util.concurrent.{Executors, ScheduledExecutorService, TimeUnit}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.sinks.InfluxLineSink
 import graft.sources.AprsIsSource
@@ -91,10 +92,11 @@ object AppConfig {
   }
 }
 
-/** Daemon wiring (SURVEY §3.1): query A = aprsis source → calibration
-  * state → line protocol → InfluxDB; query B = heartbeat. Both run until
-  * termination, like the reference's consumer + heartbeat threads
-  * (__main__.py:1199-1206) — except restart-safe via checkpointing. */
+/** Daemon wiring (SURVEY §3.1): one streaming query, aprsis source →
+  * calibration state → line protocol → InfluxDB, plus the heartbeat on a
+  * daemon thread, like the reference's consumer + heartbeat threads
+  * (__main__.py:1199-1206) — except the ingest is restart-safe via
+  * checkpointing. */
 object Main {
   def main(args: Array[String]): Unit = {
     val cfg = try AppConfig.parse(args) catch {
@@ -104,6 +106,12 @@ object Main {
         sys.exit(2) // argparse's exit code for a CLI usage error
     }
     configureLogging(cfg)
+    // before Spark starts, so a bad --interval fails fast
+    val heartbeat = Heartbeat.start(cfg)
+    try run(cfg) finally heartbeat.shutdownNow()
+  }
+
+  private def run(cfg: AppConfig): Unit = {
     // spark-submit injects spark.master on a cluster; standalone runs
     // (dev/e2e) fall back to all local cores
     val builder = if (sys.props.contains("spark.master"))
@@ -113,7 +121,7 @@ object Main {
       .config("spark.sql.shuffle.partitions",
         sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
       .config("spark.sql.session.timeZone", "UTC")
-      // keyed state (per-station calibration, TelemetryTWS) lives in the
+      // keyed state (per-station calibration, TelemetryProcessor) lives in the
       // RocksDB store: off-heap, disk-spillable, incremental (changelog)
       // checkpoints — at 100× station cardinality the default HDFS-backed
       // store holds every version on-heap and OOMs first. NOTE: the
@@ -128,10 +136,7 @@ object Main {
     // per-batch operational metrics (rows/sec per format, batch time,
     // state size) → daemon log + stdout; see OpsMetrics
     spark.streams.addListener(new graft.streaming.OpsMetrics.Listener())
-    val ingest = buildIngestQuery(spark, cfg)
-    val heartbeat = Heartbeat.start(spark, cfg)
-    spark.streams.awaitAnyTermination()
-    ingest.stop(); heartbeat.stop()
+    buildIngestQuery(spark, cfg).awaitTermination()
   }
 
   /** Daemon logging = the reference's createLog (__main__.py:1124-1150):
@@ -176,19 +181,24 @@ object Main {
 
 /** The upstream keep-alive packet every `interval` minutes
   * (__main__.py:1101-1121): `CALL>APRS,TCPIP*:>aprs2influxdb heartbeat
-  * <unixtime>`. Its own tiny streaming query over the rate source, its own
-  * socket (SURVEY §7.5 design decision — no shared connection). */
+  * <unixtime>`, on its own socket (SURVEY §7.5 design decision — no shared
+  * connection with the feed). */
 object Heartbeat {
-  def start(spark: SparkSession, cfg: AppConfig): StreamingQuery = {
-    val rate = spark.readStream.format("rate")
-      .option("rowsPerSecond", 1).load()
-    rate.writeStream
-      .outputMode("append")
-      .trigger(Trigger.ProcessingTime(s"${cfg.interval * 60} seconds"))
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) send(cfg)
-      }
-      .start()
+  /** Sends one heartbeat now, then one `cfg.interval` minutes after each
+    * send ends (the reference's send-then-sleep loop), on one daemon thread
+    * that never holds the JVM open. Stop it with `shutdownNow()`.
+    * Throws IllegalArgumentException for an interval ≤ 0, which
+    * AppConfig.parse accepts (argparse parity) but no schedule can run. */
+  def start(cfg: AppConfig): ScheduledExecutorService = {
+    require(cfg.interval > 0,
+      s"--interval must be a positive number of minutes, got ${cfg.interval}")
+    val scheduler = Executors.newSingleThreadScheduledExecutor { r =>
+      val t = new Thread(r, "aprs-heartbeat")
+      t.setDaemon(true)
+      t
+    }
+    scheduler.scheduleWithFixedDelay(() => send(cfg), 0, cfg.interval, TimeUnit.MINUTES)
+    scheduler
   }
 
   private[graft] def send(cfg: AppConfig): Unit = {

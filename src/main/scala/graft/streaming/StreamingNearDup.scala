@@ -50,7 +50,7 @@ object StreamingNearDup {
     * `ttl` (opt-in, VERDICT r7 #5): without it the (band, bkey) store
     * grows with distinct buckets forever; with it an idle bucket's owner
     * expires `ttl` after its last traffic (idle-TTL — every touch
-    * re-arms, the TelemetryTWS calibration convention). The recall
+    * re-arms, so a bucket in steady use never expires). The recall
     * trade is explicit: an evicted bucket silently re-admits its next
     * member as a NEW owner, so a near-copy arriving later than `ttl`
     * after its original raises no alert — acceptable exactly when the
@@ -58,7 +58,8 @@ object StreamingNearDup {
     * pipeline over the full corpus remains the exhaustive verifier).
     * TTL needs processing-time timeouts, under which the query
     * self-triggers no-data batches to fire expirations — poll the sink
-    * rather than relying on processAllAvailable() (TelemetryTWS note). */
+    * rather than relying on processAllAvailable(), which never returns
+    * while those batches keep coming. */
   def candidateAlerts(stream: DataFrame, idCol: String = "doc_id",
       textCol: String = "text",
       ttl: Option[java.time.Duration] = None): DataFrame = {

@@ -7,7 +7,8 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
 import graft.transform.{AprsCalibration, AprsLineProtocol}
 
-/** Streaming twin of AprsCalibration: the reference's process-global
+/** The daemon's calibration operator (the one streaming implementation;
+  * [[AprsCalibration]] is its batch oracle twin): the reference's process-global
   * `telemetryDictionary` (callsign → 5×{a,b,c}, last-write-wins, written by
   * telemetry-message packets — /root/reference/aprs2influxdb/__main__.py:
   * 979-993, read at :114-125) as keyed streaming state.
@@ -18,7 +19,11 @@ import graft.transform.{AprsCalibration, AprsLineProtocol}
   * upgrade over the reference's lost-on-restart map, SURVEY §2.9). Within
   * a micro-batch, rows are applied in arrival order (`seqCol`, assigned by
   * the source) — matching the reference's single-threaded consumer
-  * ordering per station.
+  * ordering per station. State has no timeout: like the reference's
+  * never-evicted dictionary, a station's equations live until replaced.
+  * Every packet's full Row goes through the state op, because all rows
+  * flow on to the line formatter; a narrow telemetry-only state op
+  * unioned with the other formats would scan the source twice.
   */
 object TelemetryProcessor {
 

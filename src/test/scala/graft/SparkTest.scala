@@ -13,7 +13,8 @@ object SparkTest {
       // match GraftSession: un-flagged timestamp[us] parquet reads as
       // TIMESTAMP (UTC), not TIMESTAMP_NTZ
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // transformWithState requires the RocksDB state store provider
+      // the daemon's state store (Main); StreamingSpec asserts keyed
+      // state really runs on it
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       .config("spark.sql.session.timeZone", "UTC")
