@@ -208,8 +208,7 @@ object Heartbeat {
       val socket = new Socket(cfg.host, cfg.port)
       try {
         val out = new OutputStreamWriter(socket.getOutputStream, StandardCharsets.UTF_8)
-        out.write(s"user ${cfg.callsign} pass " +
-          s"${AprsIsSource.passcode(cfg.callsign)} vers aprs2influxdbspark 0.1.0\r\n")
+        out.write(AprsIsSource.loginLine(cfg.callsign))
         out.write(line + "\r\n")
         out.flush()
       } finally socket.close()

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions.col
 import graft.operators.Relational
 
 /** The time-series monitoring family as one cron-runnable entry — the
-  * BATCH verdicts behind the three streaming watchers, over any events
+  * BATCH anomaly, dropout and trend verdicts, over any events
   * parquet (the table the reference's daemon feeds InfluxDB with):
   *
   *   anomaly <sfDir>                 q105: hours breaching the per-type

@@ -921,8 +921,8 @@ object Dedup {
   def q101BloomDecontam(s: SparkSession, dir: String): DataFrame =
     bloomDecontamOf(docs(s, dir))
 
-  /** Fallback sketch capacity when no estimate is available (the
-    * streaming arm's default). [[bloomDecontamOf]] right-sizes instead:
+  /** Fallback sketch capacity when no estimate is available
+    * ([[bloomOf]]'s default). [[bloomDecontamOf]] right-sizes instead:
     * a fixed generous capacity costs a multi-MB literal broadcast into
     * every probe stage's task binary regardless of data (measured 3.6 MB
     * and ~3 s of pure serialization overhead at sf0.1 with 4M). */
@@ -945,8 +945,7 @@ object Dedup {
   /** Driver-fetched Bloom sketch of a DataFrame's `colName` string
     * column, built with the engine's own distributed
     * `BloomFilterAggregate` (partial sketches OR-merged; xxhash64 keys).
-    * Null when the frame is empty — see [[bloomGate]]. Shared by q101
-    * and [[graft.streaming.StreamDecontam]]'s bloom arm.
+    * Null when the frame is empty — see [[bloomGate]]. Used by q101.
     *
     * Spark 4 silently CLAMPS the aggregate's numItems/numBits to
     * `spark.sql.optimizer.runtime.bloomFilter.maxNumItems`/`maxNumBits`

@@ -519,13 +519,12 @@ object Relational {
   }
 
   // --------------------------------------------------------------- q130
-  /** q130: the LAST-CLOSED-HOUR presence audit — ONE shared definition
-    * with [[graft.streaming.StreamingDropout]] (the q105-family dropout
-    * half, VERDICT r12 #4): one row per expected type with its event
-    * count at the NEWEST hour of the rollup; `n_events = 0` IS the
-    * dropout alert set the streaming watcher fires on. Registered as
-    * its own oracle query so the batch twin of the door's dropout
-    * semantics is hash-checked, not just spec-asserted. Cost: one
+  /** q130: the LAST-CLOSED-HOUR presence audit — the q105-family
+    * dropout half (VERDICT r12 #4): one row per expected type with its
+    * event count at the NEWEST hour of the rollup; `n_events = 0` IS
+    * the dropout set. A silenced type produces no bucket, so the spike
+    * arm never sees it; absence is judged relative to feed progress
+    * (the rollup's newest hour advances without the type). Cost: one
     * filtered rollup hour + a #types-row left join — the rollup is
     * time-range × #types sized, never raw events. */
   def q130DropoutPresence(s: SparkSession, dir: String): DataFrame = {
@@ -535,8 +534,9 @@ object Relational {
 
   /** One row per expected type: (event_type, h = the newest bucket
     * hour, n_events at that hour; 0 = dropout). Empty rollup → empty
-    * frame: no closed hour means nothing is judgeable yet (the
-    * feed-level-blackout case StreamingDropout documents). */
+    * frame: no closed hour means nothing is judgeable yet (a
+    * feed-level blackout never closes an hour; that is liveness, not a
+    * per-type statistic). */
   private[graft] def lastHourPresenceOf(buckets: DataFrame,
       expectedTypes: DataFrame): DataFrame = {
     val s = buckets.sparkSession
@@ -593,10 +593,10 @@ object Relational {
 
   /** q135 over an EXISTING (h, event_type, n) rollup — the shared
     * definition [[graft.streaming.StreamingDownsample]] consumers run
-    * against the watermark-FINALIZED rollup (the StreamingDropout
-    * batch-over-rollup convention: correlation is a whole-history
-    * statistic, so the continuous twin audits the finalized buckets on
-    * a timer rather than keeping quadratic pair state in the stream). */
+    * against the watermark-FINALIZED rollup (batch over the rollup:
+    * correlation is a whole-history statistic, so the finalized buckets
+    * are audited on a timer rather than keeping quadratic pair state in
+    * the stream). */
   private[graft] def seriesCorrelationFromBuckets(
       buckets: DataFrame): DataFrame = {
     val s = buckets.sparkSession
@@ -729,8 +729,7 @@ object Relational {
   }
 
   /** Per-type (med_n, mad_n) thresholds from a dense (wstart,
-    * event_type, n) grid — q105's statistic, shared with
-    * [[graft.streaming.StreamingAnomaly]]'s at-the-door alerting. */
+    * event_type, n) grid — q105's statistic. */
   private[graft] def medianThresholds(g: DataFrame): DataFrame = {
     val s = g.sparkSession
     import s.implicits._
@@ -1026,14 +1025,10 @@ object Relational {
     * the median band can't see) still breaks the trend forecast.
     * rmse = 0 (a perfectly-fit training series, e.g. exactly linear or
     * constant) means ANY deviation alerts — the q105 MAD-0 convention
-    * (ADVICE r14 #5), shared verbatim by q144 and the streaming
-    * watcher. [[graft.streaming.StreamingForecastAlert]] runs the
-    * model-selecting q144 superset of this verdict over the live rollup
-    * each time a new hour closes — ONE definition, the
-    * q130/StreamingDropout convention, so door and batch never drift
-    * (on spans too short for a seasonal estimate q144's verdict IS this
-    * one's). Scale: the q141 class (grid-sized arrays, one fit pass) +
-    * a #types-row join against the newest hour's actuals. */
+    * (ADVICE r14 #5), shared verbatim by q144 (on spans too short for
+    * a seasonal estimate q144's verdict IS this one's). Scale: the q141
+    * class (grid-sized arrays, one fit pass) + a #types-row join
+    * against the newest hour's actuals. */
   def q142ForecastBacktest(s: SparkSession, dir: String): DataFrame =
     forecastBacktestOf(t(s, dir, "events"))
 
@@ -1082,10 +1077,8 @@ object Relational {
     * express, the seasonal fit wins the argmin, its forecast tracks the
     * cycle, and the peak hours STOP paging (planted spec). rmse = 0
     * (a perfectly-fit training series, e.g. exactly constant or exactly
-    * periodic) means ANY deviation alerts — the q105 MAD-0 convention,
-    * shared by [[graft.streaming.StreamingForecastAlert]] which re-runs
-    * THIS function per closed hour (ADVICE r14 #5: the convention is
-    * now documented at the definition both consumers share).
+    * periodic) means ANY deviation alerts — the q105 MAD-0 convention
+    * (ADVICE r14 #5), documented here at its definition.
     *
     * Scale: the q141/q143 class — grid-sized fits (9 + 27 candidates ×
     * #types), one #types-row join against the newest hour. */
@@ -1099,12 +1092,9 @@ object Relational {
       buckets: DataFrame): DataFrame =
     forecastModelSelectDetailed(buckets).drop("h", "train_hours")
 
-  /** q144 plus the bookkeeping columns the streaming watcher needs —
-    * the newest closed hour `h` and the train span `train_hours`, both
-    * stamped as literals from the SAME denseGrid bounds the fit itself
-    * used. One read: the watcher derives the alert hour from the rows
-    * it collected, so a new hour finalizing mid-watch can never label
-    * alerts with a newer hour than the fit saw (ADVICE r14 #2). */
+  /** q144 plus two bookkeeping columns — the newest closed hour `h`
+    * and the train span `train_hours`, both stamped as literals from
+    * the SAME denseGrid bounds the fit itself used (ADVICE r14 #2). */
   private[graft] def forecastModelSelectDetailed(
       buckets: DataFrame): DataFrame = {
     val s = buckets.sparkSession
@@ -1527,8 +1517,7 @@ object Relational {
   /** The composite tag-set SERIES key (InfluxDB's own series = tag-set
     * model): event_type × user bucket, folded into the event_type
     * column so the whole single-tag machinery runs verbatim on the
-    * product. ONE definition shared by q154, q155 and
-    * [[graft.streaming.StreamingNewSeries]]. */
+    * product. ONE definition shared by q154 and q155. */
   private[graft] def withSeriesKey(ev: DataFrame): DataFrame = {
     val s = ev.sparkSession
     import s.implicits._

@@ -1077,9 +1077,7 @@ object TextOps {
     * post-window joins are broadcast (#langs-row frames). */
   /** (doc_id, lang, tok, h1, pri) weighted-sampling projection over any
     * `(doc_id, lang, text)` frame — ONE definition of the draw and the
-    * rank key, shared by the batch sampler (q98) and the streaming twin
-    * ([[graft.streaming.StreamingWeightedSample]]), which is what makes
-    * their samples provably identical on the same corpus. */
+    * rank key for the batch sampler (q98). */
   private[graft] def weightedProjection(d: DataFrame): DataFrame =
     d.select(col("doc_id"), col("lang"),
       size(split(trim(col("text")), "\\s+")).cast("long").as("tok"),
@@ -1173,13 +1171,6 @@ object TextOps {
   def q102DsirWeights(s: SparkSession, dir: String): DataFrame =
     dsirOf(docs(s, dir))
 
-  /** The [[DsirBuckets]]-long target/source ratio table from a corpus's
-    * eval/train split — exact BigInt arithmetic over the driver-sized
-    * cell collect. Exposed for [[graft.streaming.StreamingSelect]],
-    * which scores INCOMING documents against a historical model. */
-  def dsirRatios(d: DataFrame): Array[Long] =
-    dsirRatiosOf(dsirPerDoc(d))
-
   private def dsirPerDoc(d: DataFrame): DataFrame = {
     val s = d.sparkSession
     import s.implicits._
@@ -1191,6 +1182,9 @@ object TextOps {
       .agg(count(lit(1)).as("c"))
   }
 
+  /** The [[DsirBuckets]]-long target/source ratio table from a corpus's
+    * eval/train split — exact BigInt arithmetic over the driver-sized
+    * cell collect. */
   private def dsirRatiosOf(perDoc: DataFrame): Array[Long] = {
     val s = perDoc.sparkSession
     import s.implicits._
@@ -1870,8 +1864,7 @@ object TextOps {
     * by an earlier class — an IP inside an already-replaced email — is
     * not double-counted), with per-class counts taken on the exact text
     * state that class rewrites. One (pattern, token) set shared by the
-    * batch rewrite, the oracle twin, and the ingestion-time
-    * [[graft.streaming.StreamingRedact]]. */
+    * batch rewrite and the oracle twin. */
   val PiiRedactions: Seq[(String, String)] = Seq(
     PiiEmail -> "<EMAIL>", PiiIpv4 -> "<IP>", PiiPhone -> "<PHONE>")
 
@@ -1909,7 +1902,7 @@ object TextOps {
     * corpus carries no PII (every count 0, changed false, md5s equal —
     * still hash-checked end to end against the oracle running the same
     * chain); PiiSpec plants real emails/IPs/phones and pins the rewrite
-    * byte-exactly, and the streaming twin shares this exact chain. */
+    * byte-exactly. */
   def q114PiiRewrite(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     piiRewriteOf(docs(s, dir))

@@ -156,12 +156,12 @@ object InfluxLineSink {
 
   /** Attach as a streaming sink with exactly-once-per-epoch delivery via
     * [[writeEpochOnce]].
-    * The commit log lives beside the engine's checkpoint by default, so
-    * the two logs travel (and get wiped) together. */
+    * The commit log lives beside the engine's checkpoint, so the two
+    * logs travel (and get wiped) together. */
   def startIdempotent(lines: DataFrame, url: String, db: String,
-      checkpointDir: String, commitDir: Option[String] = None,
+      checkpointDir: String,
       user: Option[String] = None, password: Option[String] = None): StreamingQuery = {
-    val commits = commitDir.getOrElse(s"$checkpointDir/influx-epoch-commits")
+    val commits = s"$checkpointDir/influx-epoch-commits"
     lines.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)

@@ -13,7 +13,6 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapabil
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl}
-import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.{LongType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -21,7 +20,7 @@ import graft.model.AprsSchema
 import graft.parse.AprsWireParser
 
 /** DataSource V2 micro-batch source for the APRS-IS firehose
-  * (SURVEY §2.8): `spark.readStream.format("aprsis")`.
+  * (SURVEY §2.8): `spark.readStream.format("graft.sources.AprsIsDataSource")`.
   *
   * Reference behavior mapped (__main__.py:1088-1098, 1178-1196):
   * callsign+passcode login (the public APRS-IS checksum), full-feed port,
@@ -32,10 +31,10 @@ import graft.parse.AprsWireParser
   * micro-batch pacing + `maxFramesPerTrigger`.
   *
   * Options: host (default rotate.aprs.net), port (10152 full feed),
-  * callsign (nocall), passcode (computed if absent), maxFramesPerTrigger.
+  * callsign (nocall), reconnectMs, maxFramesPerTrigger, partitionsPerBatch,
+  * maxBufferedFrames.
   */
-class AprsIsDataSource extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "aprsis"
+class AprsIsDataSource extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
     AprsIsSource.fullSchema
   override def getTable(schema: StructType, partitioning: Array[Transform],
@@ -60,6 +59,11 @@ object AprsIsSource {
     }
     hash & 0x7fff
   }
+
+  /** The APRS-IS login line, CRLF-terminated — sent first on every
+    * connection, by the feed reader and by the heartbeat alike. */
+  def loginLine(callsign: String): String =
+    s"user $callsign pass ${passcode(callsign)} vers aprs2influxdbspark 0.1.0\r\n"
 }
 
 class AprsIsTable(options: CaseInsensitiveStringMap) extends Table with SupportsRead {
@@ -88,8 +92,6 @@ class AprsIsMicroBatchStream(options: CaseInsensitiveStringMap)
   private val host = options.getOrDefault("host", "rotate.aprs.net")
   private val port = options.getInt("port", 10152)
   private val callsign = options.getOrDefault("callsign", "nocall")
-  private val pass = Option(options.get("passcode"))
-    .map(_.toInt).getOrElse(AprsIsSource.passcode(callsign))
   private val reconnectMs = options.getLong("reconnectMs", 1000L)
   private val maxPerTrigger = options.getLong("maxFramesPerTrigger", 100000L)
   private val partitionsPerBatch =
@@ -143,7 +145,7 @@ class AprsIsMicroBatchStream(options: CaseInsensitiveStringMap)
         try {
           socket = new Socket(host, port)
           val out = new OutputStreamWriter(socket.getOutputStream, StandardCharsets.UTF_8)
-          out.write(s"user $callsign pass $pass vers aprs2influxdbspark 0.1.0\r\n")
+          out.write(AprsIsSource.loginLine(callsign))
           out.flush()
           val in = new BufferedReader(
             new InputStreamReader(socket.getInputStream, StandardCharsets.UTF_8))

@@ -32,7 +32,7 @@ import graft.operators.TextOps
   * Scale shape: scoring a micro-batch is batch-sized work against three
   * broadcast model frames (zero streaming state — the only restart
   * state is the source offset log), the same stream-static shape as
-  * StreamingSpanStrip/StreamDecontam.
+  * StreamingSpanStrip.
   */
 object StreamingLmGate {
 

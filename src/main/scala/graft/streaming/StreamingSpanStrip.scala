@@ -13,7 +13,7 @@ import graft.operators.Dedup
   * authority for within-corpus and within-batch duplication; this is the
   * at-the-door filter that stops already-known text from ever entering
   * the working set — the continuous complement, exactly as
-  * StreamingDedup is to q34 and StreamDecontam to q60.
+  * StreamingDedup is to q34.
   *
   * Shape: per-doc gram explode is the same stateless map-side md5 as the
   * batch path; the membership check is a stream-static equi-join on the

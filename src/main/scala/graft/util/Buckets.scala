@@ -21,9 +21,9 @@ object Buckets {
     * one definition serves ids and tokens alike. */
   def modN(c: String, n: Int): Column = expr(sqlModN(c, n))
 
-  /** The raw SQL form, for call sites that need the idiom INSIDE a SQL
-    * lambda (StreamingSelect's per-row aggregate) where a Column can't
-    * reach — same single-definition guarantee. */
+  /** The raw SQL form, for call sites that need the idiom inside a SQL
+    * expression string where a Column can't reach — same
+    * single-definition guarantee. */
   def sqlModN(c: String, n: Int): String = s"${sqlH8(c)} % $n"
 
   /** The shared first-8-hex-chars-of-md5 value BEFORE the modulus — for

@@ -187,6 +187,48 @@ class DaemonSpec extends AnyFunSuite {
     } finally aprs.close()
   }
 
+  test("login: feed and heartbeat send the same exact login bytes") {
+    import org.apache.spark.sql.util.CaseInsensitiveStringMap
+    import graft.sources.AprsIsMicroBatchStream
+    // raw bytes up to and including the first LF, one per connection
+    val logins = new ConcurrentLinkedQueue[String]()
+    val server = new ServerSocket(0)
+    val t = new Thread {
+      override def run(): Unit =
+        while (!server.isClosed) {
+          try {
+            val s = server.accept()
+            val in = s.getInputStream
+            val buf = new java.io.ByteArrayOutputStream()
+            var b = in.read()
+            while (b != -1 && b != '\n') { buf.write(b); b = in.read() }
+            if (b == '\n') buf.write(b)
+            logins.add(buf.toString(StandardCharsets.UTF_8.name))
+          } catch { case _: Exception => () }
+        }
+    }
+    t.setDaemon(true)
+    t.start()
+    val expected = "user nocall pass 12960 vers aprs2influxdbspark 0.1.0\r\n"
+    val opts = new java.util.HashMap[String, String]()
+    opts.put("host", "127.0.0.1")
+    opts.put("port", server.getLocalPort.toString)
+    opts.put("callsign", "nocall")
+    opts.put("reconnectMs", "60000") // one feed connection in this test
+    val feed = new AprsIsMicroBatchStream(new CaseInsensitiveStringMap(opts))
+    try {
+      val deadline = System.currentTimeMillis() + 10000
+      while (logins.isEmpty && System.currentTimeMillis() < deadline)
+        Thread.sleep(50)
+      assert(logins.poll() == expected)
+      Heartbeat.send(AppConfig(host = "127.0.0.1", port = server.getLocalPort,
+        callsign = "nocall"))
+      while (logins.isEmpty && System.currentTimeMillis() < deadline + 10000)
+        Thread.sleep(50)
+      assert(logins.poll() == expected)
+    } finally { feed.stop(); server.close() }
+  }
+
   test("heartbeat: start sends at once, stop ends the schedule") {
     val received = new ConcurrentLinkedQueue[String]()
     val aprs = aprsStub(Seq.empty, received)

@@ -364,32 +364,6 @@ class SourceSinkSpec extends AnyFunSuite {
     } finally server.close()
   }
 
-  test("file replay: raw frame log parses on executors, comments/garbage drop") {
-    val dir = java.nio.file.Files.createTempDirectory("aprs_replay")
-    val frames = Seq(
-      "# aprsc 2.1.4 server banner",
-      "N0CALL>APRS,WIDE1-1:!4903.50N/07201.75W-replay one",
-      "not a valid frame at all",
-      "KB1LQD>APRS::KB1LQD   :EQNS.0,2,1,0,1,0,0,1,0,0,1,0,0,1,0",
-      "",
-      "DIGI-1>BEACON:replay beacon")
-    java.nio.file.Files.write(dir.resolve("feed.log"),
-      frames.mkString("\n").getBytes)
-    val df = graft.sources.AprsFileReplay.read(spark, dir.toString)
-    val got = df.select("format", "from", "_seq").collect()
-      .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-      .sortBy(_._3)
-    assert(got.map(g => (g._1, g._2)).toSeq == Seq(
-      ("uncompressed", "N0CALL"), ("telemetry-message", "KB1LQD"),
-      ("beacon", "DIGI-1")))
-    // _seq preserves file order (banner/garbage/blank consume indices)
-    assert(got.map(_._3).toSeq == got.map(_._3).sorted.toSeq)
-    // and the replay feeds the same downstream pipeline as the live source
-    val lines = TelemetryProcessor.toLines(df, "_seq")
-      .filter($"line".isNotNull).select($"line").as[String].collect()
-    assert(lines.length == 2)
-  }
-
   test("influx sink: newline-batched POST bodies to /write?db=") {
     val bodies = new ConcurrentLinkedQueue[String]()
     val http = HttpServer.create(new InetSocketAddress(0), 0)

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -118,51 +118,6 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
-  /** StreamDecontam's once-per-doc alert guarantee must hold ACROSS a
-    * restart: the dropDuplicates state checkpoints with the query, so a
-    * doc alerted before the bounce never re-alerts after it. */
-  test("streaming decontamination alert state survives a restart") {
-    import org.apache.spark.sql.types._
-    import spark.implicits._
-    val dir = Files.createTempDirectory("decontam_restart")
-    val ckpt = Files.createTempDirectory("decontam_restart_ckpt")
-    val leak = "zero one two three four five six"
-    val evalSh = graft.streaming.StreamDecontam.evalShingles(
-      Seq((100L, leak)).toDF("doc_id", "text"))
-    def doc(idx: Int, text: String) = s"""{"doc_id":$idx,"text":"$text"}"""
-    val schema = StructType(Seq(StructField("doc_id", LongType),
-      StructField("text", StringType)))
-    val alerts = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long]()
-    def startQuery() = {
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).json(dir.toString)
-      graft.streaming.StreamDecontam.alerts(stream, evalSh)
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          batch.collect().foreach(r => alerts.add(r.getLong(0)))
-        }
-        .option("checkpointLocation", ckpt.toString)
-        .outputMode("append").start()
-    }
-    Files.write(dir.resolve("b1.json"),
-      Seq(doc(0, "intro then " + leak)).mkString("\n").getBytes)
-    val q1 = startQuery()
-    try { q1.processAllAvailable() } finally { q1.stop() }
-    assert(alerts.contains(0L), s"pre-restart alert missing: $alerts")
-    // restart on the same checkpoint: the SAME doc re-sent must not
-    // re-alert; a newly contaminated doc must
-    Files.write(dir.resolve("b2.json"),
-      Seq(doc(0, "intro then " + leak), doc(5, leak + " tail words"))
-        .mkString("\n").getBytes)
-    val q2 = startQuery()
-    try {
-      q2.processAllAvailable()
-      val ids = alerts.toArray(Array.empty[java.lang.Long]).map(_.longValue).toSeq
-      assert(ids.count(_ == 0L) == 1, s"doc 0 re-alerted after restart: $ids")
-      assert(ids.contains(5L), s"post-restart contamination missed: $ids")
-    } finally q2.stop()
-  }
-
   /** StreamingSpanStrip: incoming docs are rewritten with corpus-known
     * spans removed, with EXACTLY q99's strip arithmetic (shared rebuild),
     * across a checkpoint restart — a quoting doc strips to its novel
@@ -254,174 +209,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(plain(1L) == 20L, s"plain strip must remove the quote: $plain")
   }
 
-  /** StreamingRedact (VERDICT r8 #2): the at-the-door PII scrub must be
-    * byte-identical to the batch q114 chain — one shared pattern set, so
-    * there is no second place for the redaction rules to drift. The op
-    * is stateless, so the equality holds per row regardless of batching
-    * (proven across two micro-batches + a checkpoint restart). */
-  test("streaming redact equals the batch q114 chain byte-for-byte") {
-    import org.apache.spark.sql.types._
-    import spark.implicits._
-    val dir = Files.createTempDirectory("redact")
-    val ckpt = Files.createTempDirectory("redact_ckpt")
-    val texts = Seq(
-      1L -> "contact alice@example.com or bob.smith+x@mail.co today",
-      2L -> "server 10.0.255.3 and 192.168.1.1 rebooted",
-      3L -> "call +1 555 123-4567 now",
-      4L -> "nothing sensitive here at all",
-      5L -> "mail me at bob@10.0.0.1 thanks")
-    def doc(id: Long, text: String) = s"""{"doc_id":$id,"text":"$text"}"""
-    val schema = StructType(Seq(StructField("doc_id", LongType),
-      StructField("text", StringType)))
-    val out = new java.util.concurrent.ConcurrentHashMap[Long, (Long, Long, Long, Boolean, String, String)]()
-    def startQuery() = {
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).json(dir.toString)
-      graft.streaming.StreamingRedact.redacted(stream).writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          batch.collect().foreach(r => out.put(r.getLong(0),
-            (r.getLong(1), r.getLong(2), r.getLong(3), r.getBoolean(4),
-              r.getString(5), r.getString(6))))
-          ()
-        }
-        .option("checkpointLocation", ckpt.toString)
-        .outputMode("append").start()
-    }
-    Files.write(dir.resolve("b1.json"),
-      texts.take(3).map { case (id, t) => doc(id, t) }.mkString("\n").getBytes)
-    val q1 = startQuery()
-    try q1.processAllAvailable() finally q1.stop()
-    // restart on the same checkpoint: remaining docs arrive, served rows
-    // are not re-emitted (offset log), and the chain is unchanged
-    Files.write(dir.resolve("b2.json"),
-      texts.drop(3).map { case (id, t) => doc(id, t) }.mkString("\n").getBytes)
-    val q2 = startQuery()
-    try q2.processAllAvailable() finally q2.stop()
-    val batchTwin = graft.streaming.StreamingRedact.redacted(
-        texts.toDF("doc_id", "text")).collect()
-      .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getBoolean(4), r.getString(5), r.getString(6)))).toMap
-    assert(out.size == texts.size, s"served ${out.size} of ${texts.size}")
-    texts.foreach { case (id, _) =>
-      assert(out.get(id) == batchTwin(id),
-        s"doc $id: stream=${out.get(id)} batch=${batchTwin(id)}")
-    }
-    assert(batchTwin(1L)._6 == "contact <EMAIL> or <EMAIL> today" &&
-      batchTwin(1L)._4 && !batchTwin(4L)._4)
-  }
-
-  /** StreamingWeightedSample: after the last document, the bounded
-    * per-language reservoir must equal batch q98 BIT-FOR-BIT on the same
-    * corpus — sample membership, ranks and estimator values — across a
-    * checkpoint restart (the reservoir state carries over, so documents
-    * streamed before the bounce still compete with those after). */
-  test("streaming weighted reservoir converges to the batch q98 sample") {
-    import org.apache.spark.sql.types._
-    import spark.implicits._
-    val dir = Files.createTempDirectory("wres")
-    val ckpt = Files.createTempDirectory("wres_ckpt")
-    val corpusDir = Files.createTempDirectory("wres_corpus").toString
-    val rnd = new scala.util.Random(77L)
-    val docs = (0 until 60).map { i =>
-      val lang = if (i % 2 == 0) "aa" else "bb"
-      val tok = 1 + rnd.nextInt(50)
-      (1000L + i, Seq.fill(tok)("w").mkString(" "), lang)
-    }
-    docs.map { case (id, t, l) => (id, t, l, "s1", 10L) }
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-      .write.mode("overwrite").parquet(s"$corpusDir/documents.parquet")
-    val schema = StructType(Seq(StructField("doc_id", LongType),
-      StructField("text", StringType), StructField("lang", StringType)))
-    def json(d: (Long, String, String)) =
-      s"""{"doc_id":${d._1},"text":"${d._2}","lang":"${d._3}"}"""
-    // latest emission wins per (lang, rk) — update-mode lattice
-    val latest = new java.util.concurrent.ConcurrentHashMap[(String, Long), (Long, Long, Long, Long)]()
-    def startQuery() = {
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).json(dir.toString)
-      graft.streaming.StreamingWeightedSample.sample(stream)
-        .writeStream
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          b.collect().foreach(r => latest.put((r.getString(0), r.getLong(1)),
-            (r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))))
-          ()
-        }
-        .option("checkpointLocation", ckpt.toString)
-        .outputMode("update").start()
-    }
-    // first 25 docs, then a restart, then the rest (+ one re-send, which
-    // must be idempotent in the reservoir)
-    Files.write(dir.resolve("b1.json"),
-      docs.take(25).map(json).mkString("\n").getBytes)
-    val q1 = startQuery()
-    try { q1.processAllAvailable() } finally { q1.stop() }
-    Files.write(dir.resolve("b2.json"),
-      (docs.drop(25) :+ docs.head).map(json).mkString("\n").getBytes)
-    val q2 = startQuery()
-    try { q2.processAllAvailable() } finally { q2.stop() }
-    val gotSet = {
-      import scala.jdk.CollectionConverters._
-      latest.asScala.map { case ((l, rk), (id, tok, e6, et6)) =>
-        (l, rk, id, tok, e6, et6) }.toSet
-    }
-    val want = graft.operators.TextOps.q98WeightedSample(spark, corpusDir)
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-        r.getLong(3), r.getLong(4), r.getLong(7))).toSet
-    assert(gotSet == want,
-      s"reservoir != batch:\n extra=${gotSet -- want}\n missing=${want -- gotSet}")
-  }
-
-  /** StreamingFkAudit: orphan child rows flag at ingestion against the
-    * static parent-key frame, the once-per-key alert state survives a
-    * restart, and a NULL foreign key flags as an orphan ROW (q92's
-    * anti-join semantics) without producing a key alert. */
-  test("streaming FK audit flags orphans once per key across a restart") {
-    import org.apache.spark.sql.types._
-    import spark.implicits._
-    val dir = Files.createTempDirectory("fk_stream")
-    val ckpt = Files.createTempDirectory("fk_stream_ckpt")
-    val keys = graft.streaming.StreamingFkAudit.parentKeys(
-      Seq(30L, 40L).toDF("o_orderkey"), "o_orderkey")
-    def row(k: String, q: Long) = s"""{"l_orderkey":$k,"qty":$q}"""
-    val schema = StructType(Seq(StructField("l_orderkey", LongType),
-      StructField("qty", LongType)))
-    val alerts = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long]()
-    def startQuery() = {
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).json(dir.toString)
-      graft.streaming.StreamingFkAudit
-        .orphanKeyAlerts(stream, "l_orderkey", keys)
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          batch.collect().foreach(r => alerts.add(r.getLong(0)))
-        }
-        .option("checkpointLocation", ckpt.toString)
-        .outputMode("append").start()
-    }
-    // batch 1: one matched row, one orphan key 31, one NULL key
-    Files.write(dir.resolve("b1.json"),
-      Seq(row("30", 1), row("31", 2), row("null", 3)).mkString("\n").getBytes)
-    val q1 = startQuery()
-    try { q1.processAllAvailable() } finally { q1.stop() }
-    assert(alerts.toArray.toSeq == Seq(31L), s"got $alerts")
-    // the per-ROW orphan stream (batch twin) sees both 31 and the NULL row
-    val batchOrphans = graft.streaming.StreamingFkAudit.orphans(
-      Seq((Some(30L), 1L), (Some(31L), 2L), (None: Option[Long], 3L))
-        .toDF("l_orderkey", "qty"), "l_orderkey", keys).collect()
-    assert(batchOrphans.length == 2, batchOrphans.mkString("; "))
-    // restart on the same checkpoint: re-sent 31 must NOT re-alert; a
-    // new orphan key must
-    Files.write(dir.resolve("b2.json"),
-      Seq(row("31", 4), row("32", 5)).mkString("\n").getBytes)
-    val q2 = startQuery()
-    try {
-      q2.processAllAvailable()
-      val ids = alerts.toArray(Array.empty[java.lang.Long]).map(_.longValue).toSeq
-      assert(ids.count(_ == 31L) == 1, s"key 31 re-alerted after restart: $ids")
-      assert(ids.contains(32L), s"post-restart orphan missed: $ids")
-    } finally q2.stop()
-  }
-
   /** §2.9 watermark semantics: event-time windows finalize when the
     * watermark passes their end, and rows older than the watermark are
     * DROPPED, not retro-added — the contract that bounds streaming agg
@@ -463,52 +250,6 @@ class StreamingSpec extends AnyFunSuite {
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got(0L) == 2L, s"late row must NOT count: $got")
       assert(got(20L) == 1L && got(40L) == 1L, got)
-    } finally {
-      q.stop()
-      spark.catalog.dropTempView(outName)
-    }
-  }
-
-  /** StreamingSessionize (q15's continuous twin): native session_window
-    * state merges events within the gap, finalizes on watermark, emits
-    * once per closed session — and open sessions stay unemitted. */
-  test("streaming sessionization closes sessions on watermark, holds open ones") {
-    import org.apache.spark.sql.types._
-    val dir = Files.createTempDirectory("sess_stream")
-    val outName = "sess_out"
-    def ev(ts: String, user: String) = s"""{"ts":"$ts","user_id":"$user"}"""
-    val schema = StructType(Seq(StructField("ts", TimestampType),
-      StructField("user_id", StringType)))
-    // batch 1: a@5 + a@10 merge into one session (gap 30 s); b@7 alone
-    Files.write(dir.resolve("b1.json"), Seq(
-      ev("1970-01-01 00:00:05", "a"), ev("1970-01-01 00:00:10", "a"),
-      ev("1970-01-01 00:00:07", "b")).mkString("\n").getBytes)
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).json(dir.toString)
-    val q = graft.streaming.StreamingSessionize
-      .sessions(stream, gap = "30 seconds", watermark = "10 seconds")
-      .writeStream.format("memory").queryName(outName)
-      .outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      // batch 2: a@120 — watermark 110 passes both open sessions' ends
-      // (a: 10+30=40, b: 7+30=37) → they finalize; a@120 stays OPEN
-      Files.write(dir.resolve("b2.json"),
-        Seq(ev("1970-01-01 00:02:00", "a")).mkString("\n").getBytes)
-      q.processAllAvailable()
-      // batch 3: a@300 — watermark 290 closes a's [120, 150) session
-      Files.write(dir.resolve("b3.json"),
-        Seq(ev("1970-01-01 00:05:00", "a")).mkString("\n").getBytes)
-      q.processAllAvailable()
-      val got = spark.table(outName).collect().map { r =>
-        (r.getString(0), r.getTimestamp(1).getTime / 1000,
-          r.getTimestamp(2).getTime / 1000, r.getLong(3))
-      }.toSet
-      assert(got == Set(
-        ("a", 5L, 40L, 2L),    // merged a@5 + a@10, end = last + gap
-        ("b", 7L, 37L, 1L),
-        ("a", 120L, 150L, 1L)  // a@300's session is still open: absent
-      ), s"got $got")
     } finally {
       q.stop()
       spark.catalog.dropTempView(outName)
@@ -573,120 +314,6 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
-  /** StreamingSelect: incoming docs scored against the static DSIR
-    * ratio model must land on exactly the driver-model longs — the same
-    * triangle TextOpsSpec closes for batch (batch == driver model), so
-    * door and warehouse scores agree. Stateless: a re-sent doc
-    * re-scores identically. */
-  test("streaming DSIR scoring matches the driver model per document") {
-    import org.apache.spark.sql.types._
-    import spark.implicits._
-    val dir = Files.createTempDirectory("select_stream")
-    val outName = "select_out"
-    def hex8(s: String): Long = {
-      val md = java.security.MessageDigest.getInstance("MD5")
-      java.lang.Long.parseLong(md.digest(s.getBytes("UTF-8"))
-        .map(b => f"$b%02x").mkString.take(8), 16)
-    }
-    // history: ids spanning both splits, two vocabularies
-    val ids = (0L until 400L)
-    val evalIds = ids.filter(id => hex8(id.toString) % 1000L < 100).take(3)
-    val trainIds = ids.filter(id => hex8(id.toString) % 1000L >= 100).take(5)
-    val target = "alpha beta gamma delta"
-    val off = "uno dos tres cuatro"
-    val hist = (evalIds.map((_, "en", target)) ++
-      trainIds.map((_, "en", off))).toDF("doc_id", "lang", "text")
-    val r = graft.operators.TextOps.dsirRatios(hist)
-    // live docs: one target-like, one off-target, one mixed
-    val live = Seq((9001L, "en", target + " eps"),
-      (9002L, "en", off + " seis"), (9003L, "es", "alpha uno"))
-    def model(text: String): Long =
-      text.toLowerCase.split(" ", -1)
-        .map(t => r((hex8(t) % r.length).toInt)).sum
-    Files.write(dir.resolve("b1.json"), live.map { case (id, l, t) =>
-      s"""{"doc_id":$id,"lang":"$l","text":"$t"}""" }.mkString("\n").getBytes)
-    val schema = StructType(Seq(StructField("doc_id", LongType),
-      StructField("lang", StringType), StructField("text", StringType)))
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).json(dir.toString)
-    val q = graft.streaming.StreamingSelect.scores(stream, r)
-      .writeStream.format("memory").queryName(outName)
-      .outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      val got = spark.table(outName).collect()
-        .map(row => row.getLong(0) -> ((row.getLong(2), row.getLong(3)))).toMap
-      live.foreach { case (id, _, t) =>
-        val toks = t.split(" ", -1).length.toLong
-        assert(got(id) == ((toks, model(t))),
-          s"doc $id: got ${got(id)} want (${toks}, ${model(t)})")
-      }
-      // the selection signal survives the door: target-like > off-target
-      // per token (lengths equal here)
-      assert(got(9001L)._2 > got(9002L)._2, got)
-    } finally {
-      q.stop()
-      spark.catalog.dropTempView(outName)
-    }
-  }
-
-  /** StreamingRollingUsers: within-hour duplicate users collapse via
-    * the dedup→window-agg stateful chain, finalized counts equal the
-    * batch q108 per-hour arm on the same events, and the open hour
-    * stays unemitted until the watermark passes. */
-  test("streaming hourly distinct users equals the batch per-hour arm") {
-    import org.apache.spark.sql.types._
-    import spark.implicits._
-    val dir = Files.createTempDirectory("rolling_stream")
-    val outName = "rolling_out"
-    val hUs = graft.operators.Relational.GapfillHourUs
-    def ev(h: Long, u: Long, i: Int) =
-      s"""{"us":${h * hUs + i * 1000L},"user_id":$u}"""
-    // hour 100: users 1,1,2 (dup event) → 2; hour 101: users 2,3 → 2
-    Files.write(dir.resolve("b1.json"), Seq(
-      ev(100L, 1L, 0), ev(100L, 1L, 1), ev(100L, 2L, 2),
-      ev(101L, 2L, 0), ev(101L, 3L, 1)).mkString("\n").getBytes)
-    val schema = StructType(Seq(StructField("us", LongType),
-      StructField("user_id", LongType)))
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).json(dir.toString)
-      .withColumn("ts", timestamp_micros(col("us")))
-    val q = graft.streaming.StreamingRollingUsers.hourlyDistinct(stream)
-      .writeStream.format("memory").queryName(outName)
-      .outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      // flush event finalizes both real hours
-      Files.write(dir.resolve("b2.json"), ev(200L, 9L, 0).getBytes)
-      q.processAllAvailable()
-      val got = spark.table(outName).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got == Map(100L -> 2L, 101L -> 2L),
-        s"hour 200 must stay open, dups must collapse: $got")
-      // state EVICTS with the watermark (the review finding): after
-      // hours 100/101 finalize, only the open hour-200 entries remain —
-      // 4 original (user, hour) pairs must not linger in the dedup store
-      val stateRows = q.lastProgress.stateOperators
-        .map(_.numRowsTotal).sum
-      assert(stateRows <= 3,
-        s"dedup/agg state did not evict finalized hours: $stateRows rows")
-      assertRocksDbState(q) // the dedup→window chain runs on RocksDB
-      // parity with the batch arm on the same finalized hours
-      val batch = graft.operators.Relational.rollingUsersOf(
-        Seq((100L * hUs, 1L), (100L * hUs + 1000L, 1L),
-          (100L * hUs + 2000L, 2L), (101L * hUs, 2L), (101L * hUs + 1000L, 3L))
-          .toDF("us", "user_id")
-          .withColumn("ts", timestamp_micros(col("us"))).drop("us"))
-        .collect().map(r => r.getString(0).substring(11, 13).toLong -> r.getLong(1))
-        .toMap
-      assert(got.map { case (h, n) => (h % 24) -> n } == batch,
-        s"stream $got vs batch $batch")
-    } finally {
-      q.stop()
-      spark.catalog.dropTempView(outName)
-    }
-  }
-
   /** StreamingDownsample across a checkpoint restart: buckets finalized
     * before the bounce are not re-emitted after it (offset log + window
     * state checkpoint together), and post-restart data lands in new
@@ -732,306 +359,6 @@ class StreamingSpec extends AnyFunSuite {
       assert(got == Seq((100L, 3L), (102L, 1L)),
         s"post-restart rollup must append exactly hour 102: $got")
     } finally q2.stop()
-  }
-
-  /** StreamingAnomaly: a finalized spike bucket breaching the
-    * historical median/MAD band alerts exactly once; an in-band bucket
-    * stays silent. Thresholds come from q105's own statistic over the
-    * planted history. */
-  test("streaming anomaly alerts on spike buckets against q105 thresholds") {
-    import org.apache.spark.sql.types._
-    import spark.implicits._
-    val dir = Files.createTempDirectory("anomaly_stream")
-    val outName = "anomaly_out"
-    val hUs = graft.operators.Relational.GapfillHourUs
-    // history: tag a steady 2/hour for hours 100..109 → med 2, mad 0
-    val hist = (100L to 109L).flatMap(h =>
-      Seq((h * hUs, "a", 1.0), (h * hUs + 1000L, "a", 1.0)))
-      .toDF("us", "event_type", "value")
-      .withColumn("ts", timestamp_micros(col("us"))).drop("us")
-    val thr = graft.streaming.StreamingAnomaly.thresholds(hist)
-    assert(thr.collect().map(r =>
-      (r.getString(0), r.getLong(1), r.getLong(2))).toSeq == Seq(("a", 2L, 0L)))
-    def ev(h: Long, i: Int) = s"""{"us":${h * hUs + i * 1000L},"event_type":"a","value":1.0}"""
-    // live: hour 200 in-band (2 events), hour 201 spike (6 events)
-    Files.write(dir.resolve("b1.json"),
-      ((0 until 2).map(ev(200L, _)) ++ (0 until 6).map(ev(201L, _)))
-        .mkString("\n").getBytes)
-    val schema = StructType(Seq(StructField("us", LongType),
-      StructField("event_type", StringType), StructField("value", DoubleType)))
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).json(dir.toString)
-      .withColumn("ts", timestamp_micros(col("us")))
-    val q = graft.streaming.StreamingAnomaly.alerts(stream, thr)
-      .writeStream.format("memory").queryName(outName)
-      .outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      // flush so both live buckets finalize
-      Files.write(dir.resolve("b2.json"), ev(300L, 0).getBytes)
-      q.processAllAvailable()
-      val got = spark.table(outName).collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
-      assert(got == Seq(("a", 201L, 6L)),
-        s"exactly the spike bucket must alert: $got")
-    } finally {
-      q.stop()
-      spark.catalog.dropTempView(outName)
-      thr.unpersist()
-    }
-  }
-
-  /** StreamingDropout (VERDICT r12 #4): a type that goes SILENT alerts
-    * once its hour CLOSES — the driver-side listener re-checks the
-    * finalized rollup when new buckets land, so absence becomes an
-    * alert without any stream state keyed by the very types that
-    * stopped arriving. Exactly once per (type, hour): later triggers
-    * that close nothing re-fire nothing. The spike arm is untouched
-    * (its own spec above). */
-  test("streaming dropout alerts a silenced type after its hour closes") {
-    import org.apache.spark.sql.types._
-    import spark.implicits._
-    val dir = Files.createTempDirectory("dropout_stream")
-    val outName = "dropout_out"
-    val hUs = graft.operators.Relational.GapfillHourUs
-    def ev(h: Long, tag: String, i: Int) =
-      s"""{"us":${h * hUs + i * 1000L},"event_type":"$tag","value":1.0}"""
-    // history: both types live → the expected roster is {a, b}
-    val hist = (100L to 104L).flatMap(h =>
-      Seq((h * hUs, "a", 1.0), (h * hUs + 1000L, "b", 1.0)))
-      .toDF("us", "event_type", "value")
-      .withColumn("ts", timestamp_micros(col("us"))).drop("us")
-    val thr = graft.streaming.StreamingAnomaly.thresholds(hist)
-    val alerts = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long)]()
-    val watcher = new graft.streaming.StreamingDropout.Watcher(
-      outName, () => spark.table(outName), thr,
-      (tag, h) => alerts.add((tag, h)))
-    spark.streams.addListener(watcher)
-    val schema = StructType(Seq(StructField("us", LongType),
-      StructField("event_type", StringType), StructField("value", DoubleType)))
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).json(dir.toString)
-      .withColumn("ts", timestamp_micros(col("us")))
-    // live: hour 200 both types, hour 201 only a — b goes silent
-    Files.write(dir.resolve("b1.json"),
-      (Seq(ev(200L, "a", 0), ev(200L, "b", 1)) ++
-        (0 until 2).map(ev(201L, "a", _))).mkString("\n").getBytes)
-    val q = graft.streaming.StreamingDownsample.buckets(stream)
-      .writeStream.format("memory").queryName(outName)
-      .outputMode("append").start()
-    def awaitAlerts(n: Int): Seq[(String, Long)] = {
-      val deadline = System.currentTimeMillis() + 30000
-      while (alerts.size < n && System.currentTimeMillis() < deadline)
-        Thread.sleep(100) // listener bus is async past processAllAvailable
-      alerts.toArray(Array.empty[(String, Long)]).toSeq
-    }
-    try {
-      q.processAllAvailable()
-      // watermark from b1 closes hour 200 only: both types present, no
-      // alert even though b is already silent in the open hour 201
-      Thread.sleep(500)
-      assert(alerts.isEmpty,
-        s"no alert before the silent hour closes: $alerts")
-      // flush closes hour 201 → b has no bucket there → one alert
-      Files.write(dir.resolve("b2.json"), ev(300L, "a", 0).getBytes)
-      q.processAllAvailable()
-      assert(awaitAlerts(1) == Seq(("b", 201L)),
-        s"silenced type must alert at its closed hour: $alerts")
-      // a trigger that closes nothing must not re-alert the same hour
-      Files.write(dir.resolve("b3.json"), ev(300L, "a", 1).getBytes)
-      q.processAllAvailable()
-      Thread.sleep(500)
-      assert(alerts.size == 1, s"hour 201 must alert exactly once: $alerts")
-      // the still-silent type re-alerts at the NEXT closed hour (a
-      // standing outage keeps paging): closing hour 300 (a only) fires
-      // (b, 300)
-      Files.write(dir.resolve("b4.json"), ev(400L, "a", 0).getBytes)
-      q.processAllAvailable()
-      assert(awaitAlerts(2).toSet == Set(("b", 201L), ("b", 300L)),
-        s"standing outage must re-alert per closed hour: $alerts")
-    } finally {
-      q.stop()
-      spark.streams.removeListener(watcher)
-      spark.catalog.dropTempView(outName)
-      thr.unpersist()
-    }
-  }
-
-  /** StreamAttribution: stream-STREAM windowed join — purchases match a
-    * preceding click by the same user within the horizon; outside the
-    * horizon (or wrong user) never joins. */
-  test("stream-stream attribution joins within the horizon only") {
-    import org.apache.spark.sql.types._
-    val cDir = Files.createTempDirectory("attr_clicks")
-    val pDir = Files.createTempDirectory("attr_purch")
-    val outName = "attr_out"
-    def ev(ts: String, user: String, id: Long) =
-      s"""{"ts":"$ts","user_id":"$user","event_id":$id}"""
-    val schema = StructType(Seq(StructField("ts", TimestampType),
-      StructField("user_id", StringType), StructField("event_id", LongType)))
-    def stream(dir: java.nio.file.Path) = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).json(dir.toString)
-    // clicks: a@5, b@10; purchases: a@20 (15 s after click — in horizon),
-    // a@200 (195 s — outside the 30 s horizon), c@25 (no click at all)
-    Files.write(cDir.resolve("c1.json"), Seq(
-      ev("1970-01-01 00:00:05", "a", 1L),
-      ev("1970-01-01 00:00:10", "b", 2L)).mkString("\n").getBytes)
-    Files.write(pDir.resolve("p1.json"), Seq(
-      ev("1970-01-01 00:00:20", "a", 100L),
-      ev("1970-01-01 00:03:20", "a", 101L),
-      ev("1970-01-01 00:00:25", "c", 102L)).mkString("\n").getBytes)
-    val q = graft.streaming.StreamAttribution
-      .attribute(stream(cDir), stream(pDir),
-        horizon = "30 seconds", watermark = "10 seconds")
-      .writeStream.format("memory").queryName(outName)
-      .outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      // advance both watermarks so all joinable pairs emit
-      Files.write(cDir.resolve("c2.json"),
-        Seq(ev("1970-01-01 00:10:00", "z", 3L)).mkString("\n").getBytes)
-      Files.write(pDir.resolve("p2.json"),
-        Seq(ev("1970-01-01 00:10:00", "z", 103L)).mkString("\n").getBytes)
-      q.processAllAvailable()
-      val got = spark.table(outName).collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-      // only a@20 attributes to a@5's click; z@600 self-joins (0 s gap)
-      assert(got == Set(("a", 1L, 100L), ("z", 3L, 103L)), s"got $got")
-    } finally {
-      q.stop()
-      spark.catalog.dropTempView(outName)
-    }
-  }
-
-  /** StreamingHeavyHitters (q81's continuous twin): bounded bucketed
-    * Misra-Gries state whose latest-generation candidate union must stay
-    * a SUPERSET of the true heavy hitters across micro-batches. */
-  test("streaming heavy-hitter candidates stay a superset across batches") {
-    import org.apache.spark.sql.types._
-    val dir = Files.createTempDirectory("hh_stream")
-    val outName = "hh_out"
-    // three batches, 1200 tokens total: "hot" ends at 300 (25% > n/k for
-    // k=20), "warm" at 30 (2.5% < 5%), fillers unique. Fillers rotate so
-    // MG counters churn.
-    def batch(i: Int): String =
-      ((0 until 270).map(j => s"f${i}_$j") ++ Seq.fill(100)("hot") ++
-        Seq.fill(10)("warm")).map(t => s"""{"tok":"$t"}""").mkString("\n")
-    val schema = StructType(Seq(StructField("tok", StringType)))
-    Files.write(dir.resolve("b1.json"), batch(1).getBytes)
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).json(dir.toString)
-    val q = graft.streaming.StreamingHeavyHitters
-      .candidates(stream, k = 20, buckets = 8)
-      .writeStream.format("memory").queryName(outName)
-      .outputMode("update").start()
-    try {
-      q.processAllAvailable()
-      Files.write(dir.resolve("b2.json"), batch(2).getBytes)
-      q.processAllAvailable()
-      Files.write(dir.resolve("b3.json"), batch(3).getBytes)
-      q.processAllAvailable()
-      // latest generation per bucket = the current candidate sets
-      val all = spark.table(outName).collect()
-        .map(r => (r.getInt(0), r.getLong(1), r.getString(2), r.getLong(3)))
-      val latest = all.groupBy(_._1).values.toSeq.flatMap { rows =>
-        val g = rows.map(_._2).max
-        rows.filter(_._2 == g).toSeq
-      }
-      val cands = latest.map(_._3).toSet
-      assert(cands.contains("hot"), s"true heavy hitter evicted: $cands")
-      // MG estimates are lower bounds, never overcounts
-      latest.filter(_._3 == "hot").foreach(r => assert(r._4 <= 300L, r))
-      // state is bounded: no bucket's candidate set exceeds k
-      all.groupBy(r => (r._1, r._2)).foreach { case (_, rows) =>
-        assert(rows.length <= 20, s"bucket emitted ${rows.length} > k")
-      }
-    } finally {
-      q.stop()
-      spark.catalog.dropTempView(outName)
-    }
-  }
-
-  /** StreamDecontam (q60's continuous twin): stream-static shingle join,
-    * one alert per contaminated document across the query lifetime. */
-  test("streaming decontamination alerts once per contaminated doc") {
-    import org.apache.spark.sql.types._
-    import spark.implicits._
-    val dir = Files.createTempDirectory("decontam_stream")
-    val outName = "decontam_stream_out"
-    val leak = "zero one two three four five six"
-    val evalSh = graft.streaming.StreamDecontam.evalShingles(
-      Seq((100L, leak)).toDF("doc_id", "text"))
-    def doc(idx: Int, text: String) = s"""{"doc_id":$idx,"text":"$text"}"""
-    // batch 1: one contaminated, one clean
-    Files.write(dir.resolve("b1.json"),
-      Seq(doc(0, "intro then " + leak), doc(1, "totally clean text here now ok"))
-        .mkString("\n").getBytes)
-    val schema = StructType(Seq(StructField("doc_id", LongType),
-      StructField("text", StringType)))
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).json(dir.toString)
-    val q = graft.streaming.StreamDecontam.alerts(stream, evalSh)
-      .writeStream.format("memory").queryName(outName)
-      .outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      // batch 2: the SAME contaminated doc again (no second alert) + a new one
-      Files.write(dir.resolve("b2.json"),
-        Seq(doc(0, "intro then " + leak), doc(2, leak + " verbatim tail"))
-          .mkString("\n").getBytes)
-      q.processAllAvailable()
-      val alerts = spark.table(outName).collect()
-        .map(r => r.getLong(0)).sorted.toSeq
-      assert(alerts == Seq(0L, 2L), s"alerts $alerts")
-    } finally {
-      q.stop()
-      spark.catalog.dropTempView(outName)
-    }
-  }
-
-  /** The q101 bloom arm at the stream door: identical alerts to the
-    * exact-join path (no false negatives; false positives die in the
-    * exact join on the survivors), on the same batch sequence — incl. a
-    * clean doc that must NEVER alert and the once-per-doc guarantee. */
-  test("streaming bloom decontamination alerts match the exact path") {
-    import org.apache.spark.sql.types._
-    import spark.implicits._
-    val dir = Files.createTempDirectory("decontam_bloom_stream")
-    val outName = "decontam_bloom_out"
-    val leak = "zero one two three four five six"
-    val evalSh = graft.streaming.StreamDecontam.evalShingles(
-      Seq((100L, leak)).toDF("doc_id", "text"))
-    val bloom = graft.streaming.StreamDecontam.bloomSketch(evalSh)
-    assert(bloom != null, "non-empty eval set must sketch")
-    def doc(idx: Int, text: String) = s"""{"doc_id":$idx,"text":"$text"}"""
-    Files.write(dir.resolve("b1.json"),
-      Seq(doc(0, "intro then " + leak), doc(1, "totally clean text here now ok"))
-        .mkString("\n").getBytes)
-    val schema = StructType(Seq(StructField("doc_id", LongType),
-      StructField("text", StringType)))
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).json(dir.toString)
-    val q = graft.streaming.StreamDecontam.alertsBloom(stream, evalSh, bloom)
-      .writeStream.format("memory").queryName(outName)
-      .outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      Files.write(dir.resolve("b2.json"),
-        Seq(doc(0, "intro then " + leak), doc(2, leak + " verbatim tail"))
-          .mkString("\n").getBytes)
-      q.processAllAvailable()
-      val alerts = spark.table(outName).collect()
-        .map(r => r.getLong(0)).sorted.toSeq
-      assert(alerts == Seq(0L, 2L), s"alerts $alerts")
-    } finally {
-      q.stop()
-      spark.catalog.dropTempView(outName)
-    }
-    // an EMPTY eval suite sketches to null; the gate closes and the
-    // stream plan must still build (degenerate-input rule)
-    val emptySh = graft.streaming.StreamDecontam.evalShingles(
-      Seq.empty[(Long, String)].toDF("doc_id", "text"))
-    assert(graft.streaming.StreamDecontam.bloomSketch(emptySh) == null)
   }
 
   /** Ingestion-time exact dedup: the first copy of each distinct text is
@@ -2359,171 +1686,6 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  /** StreamingForecastAlert: the watcher over the live downsample
-    * rollup stays quiet while the feed follows its trend, pages exactly
-    * once when a finalized hour breaks it (per (type, hour) - monotone
-    * guard), and its alert set IS batch q144's alert=true rows over the
-    * same rollup (one definition; the short span here selects linear). */
-  test("streaming forecast alert pages on a broken trend, once per closed hour") {
-    import org.apache.spark.sql.types._
-    import spark.implicits._
-    val dir = Files.createTempDirectory("fc_alert_stream")
-    val outName = "fc_alert_out"
-    val hUs = graft.operators.Relational.GapfillHourUs
-    def ev(h: Long, k: Int) = (0 until k).map(i =>
-      s"""{"us":${h * hUs + i * 1000L},"event_type":"a","value":1.0}""")
-    val alerts = new java.util.concurrent.ConcurrentLinkedQueue[
-      (String, Long, Long, String, Double, Double)]()
-    val watcher = new graft.streaming.StreamingForecastAlert.Watcher(
-      outName, () => spark.table(outName),
-      (t, h, actual, model, fc, rmse) =>
-        { alerts.add((t, h, actual, model, fc, rmse)); () },
-      minTrainHours = 5L)
-    spark.streams.addListener(watcher)
-    val schema = StructType(Seq(StructField("us", LongType),
-      StructField("event_type", StringType), StructField("value", DoubleType)))
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).json(dir.toString)
-      .withColumn("ts", timestamp_micros(col("us")))
-    // batch 1: hours 100..109 linear (n = h-99); hour 110 seeds the
-    // watermark flush, so closed hours are 100..109 - a clean trend
-    Files.write(dir.resolve("b1.json"),
-      ((100L to 109L).flatMap(h => ev(h, (h - 99).toInt)) ++ ev(110L, 11))
-        .mkString("\n").getBytes)
-    val q = graft.streaming.StreamingDownsample.buckets(stream)
-      .writeStream.format("memory").queryName(outName)
-      .outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      assert(alerts.isEmpty, s"clean trend must not page: $alerts")
-      // batch 2: hour 110 already carries its on-trend 11 events; hour
-      // 111 SPIKES to 100; the flush event sits at hour 113 so the
-      // 10 s watermark passes hour 111's window END (112h) and closes it
-      Files.write(dir.resolve("b2.json"),
-        (ev(111L, 100) ++ ev(113L, 1)).mkString("\n").getBytes)
-      q.processAllAvailable()
-      // the watcher refits on the listener bus thread - poll, don't race
-      locally {
-        val deadline = System.currentTimeMillis() + 90000
-        while (alerts.isEmpty && System.currentTimeMillis() < deadline)
-          Thread.sleep(250)
-      }
-      val got = alerts.toArray(
-        Array.empty[(String, Long, Long, String, Double, Double)]).toSeq
-      assert(got.map(a => (a._1, a._2, a._3, a._4)) ==
-        Seq(("a", 111L, 100L, "linear")),
-        s"expected exactly the spike-hour page: $got")
-      assert(got.head._5 == 12.0 && got.head._6 == 0.0,
-        s"linear history must forecast 12.0 with rmse 0: $got")
-      // one definition: the watcher's set IS q144's alert rows (the
-      // 11-hour train span has no seasonal candidate, so the selected
-      // model is q142's linear verdict verbatim)
-      val batch = graft.operators.Relational
-        .forecastModelSelectFromBuckets(spark.table(outName))
-        .filter(col("alert")).collect()
-        .map(r => (r.getString(0), r.getLong(2)))
-      assert(batch.toSeq == Seq(("a", 100L)),
-        s"batch backtest over the same rollup: ${batch.toSeq}")
-      // re-processing with no new closed hour must not re-page
-      q.processAllAvailable()
-      Thread.sleep(1000)
-      assert(alerts.size == 1, s"monotone hour guard broken: $alerts")
-      // q148 cascade seam: the daily tier consumes the LIVE rollup
-      // directly (schema-identical to hourBuckets) — closed hours
-      // 100..111 all fall in epoch-day 4: n = 55+11+100, per-event
-      // value 1.0 throughout, burst envelope (max 100, min 1)
-      val daily = graft.operators.Relational
-        .dailyFromHourly(spark.table(outName)).collect()
-      assert(daily.length == 1 && daily(0).getLong(2) == 166L &&
-        daily(0).getDouble(3) == 166.0 && daily(0).getDouble(4) == 1.0 &&
-        daily(0).getLong(5) == 12L && daily(0).getLong(6) == 100L &&
-        daily(0).getLong(7) == 1L, daily.toSeq)
-    } finally {
-      q.stop()
-      spark.streams.removeListener(watcher)
-      spark.catalog.dropTempView(outName)
-    }
-  }
-
-  /** The r14 verdict-#1 scenario, live: a 24 h-periodic spike feed. The
-    * linear-only q142 pages every on-cycle peak hour (asserted as the
-    * batch contrast over the same rollup); the model-selecting watcher
-    * fits the seasonal arm, forecasts the peak, and stays QUIET — then
-    * still pages, model = seasonal, when a spike lands OFF-cycle. */
-  test("streaming forecast alert: seasonal model quiets a periodic feed") {
-    import org.apache.spark.sql.types._
-    val dir = Files.createTempDirectory("fc_sea_stream")
-    val outName = "fc_sea_out"
-    val hUs = graft.operators.Relational.GapfillHourUs
-    val H0 = 1000L
-    // pattern count for series hour i: the diurnal spike
-    def pat(i: Long): Int = if (i % 24 == 12) 100 else 1
-    def ev(i: Long, k: Int) = (0 until k).map(n =>
-      s"""{"us":${(H0 + i) * hUs + n * 1000L},"event_type":"p","value":1.0}""")
-    val alerts = new java.util.concurrent.ConcurrentLinkedQueue[
-      (String, Long, Long, String, Double, Double)]()
-    val watcher = new graft.streaming.StreamingForecastAlert.Watcher(
-      outName, () => spark.table(outName),
-      (t, h, actual, model, fc, rmse) =>
-        { alerts.add((t, h, actual, model, fc, rmse)); () })
-    spark.streams.addListener(watcher)
-    val schema = StructType(Seq(StructField("us", LongType),
-      StructField("event_type", StringType), StructField("value", DoubleType)))
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).json(dir.toString)
-      .withColumn("ts", timestamp_micros(col("us")))
-    // batch 1: series hours 0..35 on-pattern (spike at 12); the flush
-    // event at hour 37 (itself on-pattern: 37 % 24 = 13 -> 1) closes
-    // hours 0..35 - the newest closed hour 35 is a quiet one
-    Files.write(dir.resolve("b1.json"),
-      ((0L to 35L).flatMap(i => ev(i, pat(i))) ++ ev(37L, 1))
-        .mkString("\n").getBytes)
-    val q = graft.streaming.StreamingDownsample.buckets(stream)
-      .writeStream.format("memory").queryName(outName)
-      .outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      assert(alerts.isEmpty, s"on-pattern quiet hour must not page: $alerts")
-      // batch 2: hour 36 is the next ON-CYCLE spike (36 % 24 = 12); the
-      // flush at 38 closes it. The exact-fit seasonal model forecasts
-      // the spike (sse = 0, forecast exactly 100.0) -> still quiet
-      Files.write(dir.resolve("b2.json"),
-        (ev(36L, 100) ++ ev(38L, 1)).mkString("\n").getBytes)
-      q.processAllAvailable()
-      Thread.sleep(1500)
-      assert(alerts.isEmpty,
-        s"seasonal model must forecast the on-cycle spike: $alerts")
-      // ...while the linear-only q142 over the SAME rollup pages it —
-      // the r14 state of the world, kept as the measured contrast
-      val lin = graft.operators.Relational
-        .forecastBacktestFromBuckets(spark.table(outName))
-        .filter(col("alert")).collect()
-        .map(r => (r.getString(0), r.getLong(2)))
-      assert(lin.toSeq == Seq(("p", 100L)),
-        s"linear-only must page the on-cycle peak: ${lin.toSeq}")
-      // batch 3: 100 events at hour 39 - OFF-cycle (39 % 24 = 15,
-      // expected 1); flush at 41 (on-pattern) closes it. The exact fit
-      // forecasts 1.0 with rmse 0, so ANY deviation alerts (the MAD-0
-      // convention's loud side, live)
-      Files.write(dir.resolve("b3.json"),
-        (ev(39L, 100) ++ ev(41L, 1)).mkString("\n").getBytes)
-      q.processAllAvailable()
-      locally {
-        val deadline = System.currentTimeMillis() + 90000
-        while (alerts.isEmpty && System.currentTimeMillis() < deadline)
-          Thread.sleep(250)
-      }
-      val got = alerts.toArray(
-        Array.empty[(String, Long, Long, String, Double, Double)]).toSeq
-      assert(got == Seq(("p", H0 + 39L, 100L, "seasonal", 1.0, 0.0)),
-        s"off-cycle spike must page the seasonal model: $got")
-    } finally {
-      q.stop()
-      spark.streams.removeListener(watcher)
-      spark.catalog.dropTempView(outName)
-    }
-  }
-
   /** The live cascade (q148's streaming half): hourly AND daily tiers
     * chained in ONE streaming query — a daily row emits when the
     * watermark passes its day end, carries the EXACT scaled-long value
@@ -2583,83 +1745,5 @@ class StreamingSpec extends AnyFunSuite {
       q.stop()
       spark.catalog.dropTempView("daily_out")
     }
-  }
-
-  /** StreamingNewSeries (the q155 cardinality lifecycle's door arm):
-    * each series is announced EXACTLY ONCE — by the first micro-batch
-    * that mentions it, with that batch's MIN event hour (deterministic
-    * under partitioning; on a chronological replay that IS the q155
-    * inventory's first_seen hour — asserted) — never re-announced for
-    * later events, not even after a checkpoint RESTART (the series
-    * index is state; a restart that re-announced would page ops with
-    * the whole existing keyspace). State runs on RocksDB. */
-  test("streaming new-series announces once, survives restart, matches q155") {
-    import org.apache.spark.sql.types._
-    val dir = Files.createTempDirectory("newseries")
-    val ckpt = Files.createTempDirectory("newseries_ckpt")
-    val hUs = graft.operators.Relational.GapfillHourUs
-    def ev(id: Long, h: Long, u: Long, t: String) =
-      s"""{"event_id":$id,"us":${(600000L + h) * hUs},"user_id":$u,""" +
-        s""""event_type":"$t"}"""
-    val schema = StructType(Seq(StructField("event_id", LongType),
-      StructField("us", LongType), StructField("user_id", LongType),
-      StructField("event_type", StringType)))
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long, Long)]()
-    def startQuery() = {
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).json(dir.toString)
-        .select(expr("timestamp_micros(us)").as("ts"), $"user_id",
-          $"event_type")
-      graft.streaming.StreamingNewSeries.firstSeen(stream)
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          batch.collect().foreach(r =>
-            seen.add((r.getString(0), r.getLong(1), r.getLong(2))))
-        }
-        .option("checkpointLocation", ckpt.toString)
-        .outputMode("append").start()
-    }
-    // b1, chronological: a|u1 at hours 3+5 (announce h=3), b|u2 at 4
-    Files.write(dir.resolve("b1.json"), Seq(
-      ev(1, 3, 1, "a"), ev(2, 5, 1, "a"), ev(3, 4, 2, "b"))
-      .mkString("\n").getBytes)
-    val q1 = startQuery()
-    try {
-      q1.processAllAvailable()
-      assertRocksDbState(q1)
-    } finally q1.stop()
-    assert(seen.toArray.toSet == Set(("a", 1L, 600003L), ("b", 2L, 600004L)),
-      s"batch-1 announced: $seen")
-    // b2 AFTER a restart on the same checkpoint: a|u1 again (must stay
-    // silent — even though hour 1 is earlier, the announcement stands:
-    // first ARRIVAL, the documented semantics) + new series a|u0 at 6
-    Files.write(dir.resolve("b2.json"), Seq(
-      ev(4, 1, 1, "a"), ev(5, 6, 4, "a")).mkString("\n").getBytes)
-    val q2 = startQuery()
-    try q2.processAllAvailable() finally q2.stop()
-    val got = seen.toArray(Array.empty[(String, Long, Long)]).toSet
-    assert(got == Set(("a", 1L, 600003L), ("b", 2L, 600004L),
-      ("a", 0L, 600006L)), s"after restart: $got")
-    // live ≡ batch on the chronological keyspace: every announced key is
-    // a q155 inventory row, and for keys whose first arrival was
-    // chronological (all but a|u1's hour-1 latecomer) the announced hour
-    // IS the inventory's first_seen hour
-    import spark.implicits._
-    val batchEv = Seq((1L, 3L, 1L, "a"), (2L, 5L, 1L, "a"),
-      (3L, 4L, 2L, "b"), (4L, 1L, 1L, "a"), (5L, 6L, 4L, "a"))
-      .map { case (id, h, u, t) =>
-        (id, (600000L + h) * hUs, u, t, 0.0, "{}")
-      }.toDF("event_id", "us", "user_id", "event_type", "value", "props")
-      .select($"event_id", timestamp_micros($"us").as("ts"), $"user_id",
-        $"event_type", $"value", $"props")
-    val inv = graft.operators.Relational.seriesInventoryOf(batchEv)
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1)) -> r.getString(6)).toMap
-    assert(got.map(g => (g._1, g._2)) == inv.keySet,
-      s"announced keys != inventory keys: $got vs ${inv.keySet}")
-    def wstart(h: Long) = java.time.Instant.ofEpochSecond(h * 3600L)
-      .toString.replace("T", " ").replace("Z", "")
-    for ((t, u, h) <- got if (t, u) != (("a", 1L)))
-      assert(inv((t, u)) == wstart(h), s"$t|u$u first_seen")
   }
 }
