@@ -8,9 +8,10 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
   * Spark jobs / stages / task time — the "how many sequential driver
   * round-trips does this query pay" number the bench total hides.
   * Usage: tools/run.sh graft.Profile <sfDir> <name> [name...]
-  * Each query runs once for warm-up, once measured (the Bench noop-sink
-  * discipline, minus the fork machinery — this is a relative diagnostic,
-  * not a recorded artifact). */
+  * Each query runs once for warm-up, then once measured, forced end to
+  * end through the `noop` sink with `Dedup.clearCaches()` before each run
+  * (perfbench's analytics discipline). A relative diagnostic over any
+  * roster and scale factor, not a recorded artifact. */
 object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)

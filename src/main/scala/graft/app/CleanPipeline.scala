@@ -182,8 +182,8 @@ object CleanPipeline {
     // model rejects (score ≤ θ against the saved weights — q131's gate,
     // [[graft.streaming.StreamingQualityGate]]'s artifact). Unlike the
     // LM/Gopher knobs this decision is per-doc ABSOLUTE, so the same
-    // knob is legal on runIncremental and the door: gate the SAME frozen
-    // table everywhere and append ≡ recurate ≡ door still holds
+    // knob is legal on runIncremental: gate the SAME frozen table on
+    // both runs and append ≡ recurate still holds
     val staged = qualityModel.fold(gopherStaged) { t =>
       val (qw, qTheta) =
         graft.streaming.StreamingQualityGate.loadModel(spark, t)
@@ -369,8 +369,7 @@ object CleanPipeline {
       // q116 threshold strip with the STATE-aware dup starts: base kept
       // grams always count as prior occurrences, batch-internal firsts
       // survive — identical arithmetic to runFull on the union. The
-      // chain is [[Dedup.stripRedactAgainstState]], shared with the
-      // streaming door so door bytes ≡ published bytes by construction.
+      // chain is [[Dedup.stripRedactAgainstState]].
       val redacted = Dedup.stripRedactAgainstState(
         kept.select(col("doc_id"), col("text")), statePath, minStripSpan)
       val fin = kept.drop("text").join(redacted, "doc_id")

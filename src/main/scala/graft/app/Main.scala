@@ -122,9 +122,13 @@ object Main {
         sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
       .config("spark.sql.session.timeZone", "UTC")
       // keyed state (per-station calibration, TelemetryProcessor) lives in the
-      // RocksDB store: off-heap, disk-spillable, incremental (changelog)
-      // checkpoints — at 100× station cardinality the default HDFS-backed
-      // store holds every version on-heap and OOMs first. NOTE: the
+      // RocksDB store: off-heap and disk-spillable — at 100× station
+      // cardinality the default HDFS-backed store holds every version
+      // on-heap and OOMs first. Every micro-batch commits a snapshot
+      // checkpoint of each state partition (new SST files + metadata):
+      // changelog checkpointing is off, Spark 4.1.2's default, since
+      // spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing
+      // .enabled is not set here. NOTE: the
       // provider is part of the checkpoint format — a pre-existing
       // checkpoint written by the HDFS provider cannot be resumed under
       // RocksDB (start a fresh checkpoint dir to migrate).
@@ -142,7 +146,7 @@ object Main {
   /** Daemon logging = the reference's createLog (__main__.py:1124-1150):
     * hourly-rotating file keeping 5 backups, WARNING default / DEBUG with
     * --debug. The config ships as classpath resource graft-log4j2.xml
-    * (not auto-discovered, so tests/Bench/Verify keep Spark defaults) and
+    * (not auto-discovered, so tests/Verify keep Spark defaults) and
     * must be selected before the first LogManager init — i.e. before any
     * Spark class logs. */
   private def configureLogging(cfg: AppConfig): Unit = {

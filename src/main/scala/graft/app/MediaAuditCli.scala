@@ -6,25 +6,21 @@ import org.apache.spark.sql.functions.{col, octet_length}
 import graft.operators.Multimodal
 
 /** The decode-audit lifecycle as a cron-runnable verdict (VERDICT r14
-  * #2): q139 and [[graft.streaming.StreamingDecodeAudit]] measure the
-  * stub-descriptor share, but unlike every other family
-  * (SeriesAuditCli / TextIndexCli / PqIndexCli `audit --fail-over`)
-  * there was no exit-code entry for "the stub share breached the frozen
-  * baseline". Verbs, over any assets parquet with (doc_id, payload
+  * #2): q139 measures the stub-descriptor share, but unlike every other
+  * family (SeriesAuditCli / TextIndexCli / PqIndexCli `audit
+  * --fail-over`) there was no exit-code entry for "the stub share
+  * breached the frozen baseline". Verbs, over any assets parquet with (doc_id, payload
   * binary[, n_bytes]):
   *
   *   freeze <assetsParquet> <baselineDir>
   *     run THE q139 audit ([[Multimodal.decoderAuditOf]] — one
   *     definition, hash-checked against DuckDB) over the reference
-  *     corpus and write its per-family stub share as the frozen
-  *     baseline ([[graft.streaming.StreamingDecodeAudit.baseline]]'s
-  *     map, persisted) — the exact convention the streaming gate
-  *     judges against
+  *     corpus and write its per-family stub share (family →
+  *     stub_permille) as the frozen baseline
   *
   *   audit <assetsParquet> <baselineDir> [--margin-permille m]
   *     re-run the audit over a candidate corpus and compare per family
-  *     against the frozen share + margin (default 100‰, the
-  *     StreamingDecodeAudit spec's operational margin). A family the
+  *     against the frozen share + margin (default 100‰). A family the
   *     baseline never saw is judged against share 0 — new families are
   *     exactly what the alert exists for.
   *
@@ -48,8 +44,7 @@ object MediaAuditCli {
   }
 
   /** (doc_id, payload, n_bytes) from any parquet that has the first
-    * two — the [[graft.streaming.StreamingDecodeAudit.start]] coercion,
-    * shared shape so a frozen stream sink replays through the CLI. */
+    * two: n_bytes is derived from the payload when absent. */
   private def assetsAt(spark: SparkSession, path: String): DataFrame = {
     val df = spark.read.parquet(path)
     if (df.columns.contains("n_bytes")) df

@@ -1089,8 +1089,8 @@ object Dedup {
     * and q65 are two reports over the SAME component structure, so when
     * both run in a session they share one LSH + propagation pass. Keyed
     * by (session, dir) — the corpus dirs are immutable inputs; the cached
-    * frame is a localCheckpoint, so no lineage escapes. Bench clears this
-    * before every measured pass so timings stay honest. */
+    * frame is a localCheckpoint, so no lineage escapes. A timed pass
+    * clears this first ([[clearCaches]]) so timings stay honest. */
   private val componentCache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
 
@@ -1226,23 +1226,23 @@ object Dedup {
   }
 
   // --------------------------------------------------------------- q128
-  /** DOOR-vs-BATCH keeper divergence (VERDICT r12 #7): the
-    * [[graft.streaming.CurateDoor]]'s near-dup stage is CANDIDATE-grade
-    * first-wins (a band collision drops the later arrival, owner = first
-    * toucher of the bucket), while the batch refresh verifies exact
+  /** DOOR-vs-BATCH keeper divergence (VERDICT r12 #7): an ingestion
+    * door's near-dup stage is CANDIDATE-grade first-wins (a band
+    * collision drops the later arrival, owner = first toucher of the
+    * bucket, as in [[graft.streaming.StreamingNearDup]]), while the
+    * batch refresh verifies exact
     * Jaccard and keeps the LONGEST component member (q65). The door
     * cannot adopt the batch keeper without buffering future arrivals —
     * but it can be ACCOUNTED: this audit replays BOTH decision rules
     * over one corpus (arrival order = doc_id, the door's orderCol
     * default) and counts the docs whose kept-state differs.
     *
-    *   door arm:  exact-canonical (min doc_id per content — the
-    *              IngestClean first-content-wins) survivors banded;
-    *              bucket owner = min doc_id; a doc collides if ANY of
-    *              its bands has an earlier owner (exactly
-    *              [[graft.streaming.CurateDoor.collide]]'s rule —
-    *              including its transitive quirk: a bucket owned by an
-    *              already-dropped doc still collides later arrivals)
+    *   door arm:  exact-canonical (min doc_id per content — first
+    *              content wins) survivors banded; bucket owner = min
+    *              doc_id; a doc collides if ANY of its bands has an
+    *              earlier owner — including the transitive quirk of a
+    *              first-wins door: a bucket owned by an already-dropped
+    *              doc still collides later arrivals
     *   batch arm: the q65 keeper — verified-Jaccard components, keep
     *              max n_chars (tie min doc_id)
     *
@@ -1438,9 +1438,8 @@ object Dedup {
     * base copy; append-only curation cannot retract published docs, so
     * the batch member is dropped instead (the "keeper tie" class). All
     * other decisions are identical. */
-  /** Step 2 of [[incrementalNearDupDrops]], factored for reuse by the
-    * streaming curate door ([[graft.streaming.CurateDoor]]): batch docs
-    * VERIFIED near-dup of some base doc — band collision against the
+  /** Step 2 of [[incrementalNearDupDrops]]: batch docs VERIFIED
+    * near-dup of some base doc — band collision against the
     * persisted rep signatures, exact Jaccard ≥ 0.5 against the persisted
     * shingle rows (probe restricted to candidate base docs), expanded
     * from linked representatives to their exact-collapse members. */
@@ -1554,11 +1553,9 @@ object Dedup {
   }
 
   /** The state-aware q116 strip + q114 redact chain over a batch's KEPT
-    * docs — the transform half of the incremental curate, shared
-    * verbatim by [[graft.app.CleanPipeline.runIncremental]] and the
-    * streaming door ([[graft.streaming.CurateDoor]]) so door-admitted
-    * bytes ≡ incrementally-published bytes by construction, not by
-    * parallel implementation. Input `(doc_id, text)`; output one row per
+    * docs — the transform half of the incremental curate
+    * ([[graft.app.CleanPipeline.runIncremental]]). Input
+    * `(doc_id, text)`; output one row per
     * doc: `(doc_id, text [stripped+redacted], n_pii, n_tok, n_kept,
     * n_dup_kept)` — n_dup_kept counts duplicated tokens the threshold
     * SPARED (spans < `minStripSpan`), the runFull accounting column. */
@@ -1660,9 +1657,8 @@ object Dedup {
     * testing is O(|doc| · #dup-starts) per row, bounded because document
     * length is bounded, never a corpus-sized blowup. */
   /** `(doc_id, …, toks, n)` span-strip base: every column of `d` except
-    * `text`, plus the whitespace token array and its length. Shared by
-    * the batch strip (q99) and the ingestion-time twin
-    * ([[graft.streaming.StreamingSpanStrip]]). */
+    * `text`, plus the whitespace token array and its length — the one
+    * input shape of every span-strip path (batch and incremental). */
   private[graft] def spanBase(d: DataFrame): DataFrame =
     d.withColumn("toks", split(trim(col("text")), "\\s+"))
       .withColumn("n", size(col("toks")).cast("long"))

@@ -377,9 +377,9 @@ object Relational {
   def gapfillOf(ev: DataFrame): DataFrame =
     gapfillFromBuckets(hourBuckets(ev))
 
-  /** The (hour, type) downsample — ONE schema shared by the batch path
-    * and [[graft.streaming.StreamingDownsample]] (the continuous-query
-    * role), so the gap-fill below runs identically over either. */
+  /** The (hour, type) downsample — the continuous-query rollup shape:
+    * the gap-fill below and the daily tier run over any frame with this
+    * schema. */
   def hourBuckets(ev: DataFrame): DataFrame = {
     val s = ev.sparkSession
     import s.implicits._
@@ -591,12 +591,10 @@ object Relational {
   private[graft] def seriesCorrelationOf(ev: DataFrame): DataFrame =
     seriesCorrelationFromBuckets(hourBuckets(ev))
 
-  /** q135 over an EXISTING (h, event_type, n) rollup — the shared
-    * definition [[graft.streaming.StreamingDownsample]] consumers run
-    * against the watermark-FINALIZED rollup (batch over the rollup:
-    * correlation is a whole-history statistic, so the finalized buckets
-    * are audited on a timer rather than keeping quadratic pair state in
-    * the stream). */
+  /** q135 over an EXISTING (h, event_type, n) rollup (batch over the
+    * rollup: correlation is a whole-history statistic, so finalized
+    * buckets are audited on a timer rather than keeping quadratic pair
+    * state in a stream). */
   private[graft] def seriesCorrelationFromBuckets(
       buckets: DataFrame): DataFrame = {
     val s = buckets.sparkSession
@@ -1449,10 +1447,9 @@ object Relational {
     * This is the retention economics the reference feeds InfluxDB for:
     * raw points age out, the hourly continuous-query rollup persists,
     * and week-scale dashboards read a DAILY tier built from the hourly
-    * one. [[dailyFromHourly]] consumes ANY bucket frame — the batch
-    * [[hourBuckets]] here, or the live [[graft.streaming
-    * .StreamingDownsample]] sink (spec-pinned equal) — so the cascade
-    * costs #types × #hours rows, not an events scan.
+    * one. [[dailyFromHourly]] consumes ANY bucket frame with the
+    * [[hourBuckets]] schema, so the cascade costs #types × #hours rows,
+    * not an events scan.
     *
     * Exactness: hourly sum_value IS a 1e4-scaled long divided once
     * (dsum), so the daily tier re-derives the exact long (slong — the
@@ -1583,8 +1580,7 @@ object Relational {
     seriesInventoryFromBuckets(hourBuckets(withSeriesKey(ev)))
 
   /** The inventory collapse over any (h, event_type, n) bucket frame —
-    * batch [[hourBuckets]] on the composite key above, or the live
-    * [[graft.streaming.StreamingDownsample]] sink. */
+    * e.g. [[hourBuckets]] on the composite key above. */
   private[graft] def seriesInventoryFromBuckets(
       buckets: DataFrame): DataFrame = {
     val s = buckets.sparkSession

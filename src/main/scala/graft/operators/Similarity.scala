@@ -526,14 +526,9 @@ object Similarity {
       .select($"e", $"nrm").as[(Seq[Long], Double)].collect().toIndexedSeq
   }
 
-  /** The production IVF query path: ANN top-k against an explicit
-    * (normally loaded) centroid model, WITHOUT the exact arm — recall
-    * reporting is an audit tool, not something a query-many serving path
-    * recomputes per batch. This is what build-once/query-many actually
-    * runs; Bench times it against the fit+query arm. */
   /** The cell-assigned corpus frame (vec_id, e, nrm, cell) — the static
-    * side every IVF query path (batch AND the streaming serve twin)
-    * probes. Assignment is map-side codegen against literal centroids. */
+    * side every IVF query path probes. Assignment is map-side codegen
+    * against literal centroids. */
   private[graft] def assignedCorpus(s: SparkSession, dir: String,
       cents: Seq[(Seq[Long], Double)]): DataFrame =
     assignedOf(scaled(s, dir), cents)
@@ -545,6 +540,11 @@ object Similarity {
     base.withColumn("cell", assignCell(cents))
       .select(col("vec_id"), col("e"), col("nrm"), col("cell"))
 
+  /** The production IVF query path: ANN top-k against an explicit
+    * (normally loaded) centroid model, WITHOUT the exact arm — recall
+    * reporting is an audit tool, not something a query-many serving path
+    * recomputes per batch. This is what build-once/query-many actually
+    * runs. */
   def ivfQuery(s: SparkSession, dir: String,
       cents: Seq[(Seq[Long], Double)], k: Int = 5, nprobe: Int = 1): DataFrame = {
     import s.implicits._
@@ -949,8 +949,7 @@ object Similarity {
 
   /** The production IVF-PQ serving path: (qid, nid, rk, sim) top-k from
     * a SAVED index — candidate generation scans only the encoded frame
-    * (codes + rnrm), true vectors are fetched for the shortlist alone.
-    * Bench times this against the uncompressed multiprobe serve. */
+    * (codes + rnrm), true vectors are fetched for the shortlist alone. */
   def pqServeQuery(s: SparkSession, dir: String, indexPath: String,
       k: Int = 5, nprobe: Int = MultiprobeNprobe,
       shortlist: Int = PqShortlist,

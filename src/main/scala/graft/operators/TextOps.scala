@@ -28,9 +28,9 @@ object TextOps {
     expr(s"CAST(size(filter($toksCol, t -> t IN ($lst))) AS BIGINT)")
   }
 
-  /** The en-stopword quality score — ONE definition shared by the batch
-    * cascade ([[stagedDocs]]/q54) and the streaming twin (IngestClean),
-    * and equal to q31's `quality` column by construction:
+  /** The en-stopword quality score — ONE definition for the batch
+    * cascade ([[stagedDocs]]/q54), equal to q31's `quality` column by
+    * construction:
     * stop_ratio·0.5 + (1 − punct_ratio)·0.5 over whitespace tokens of
     * the lowercased text. Empty text scores 0 (junk by definition) so
     * the length division can never hit ANSI 0/0. */
@@ -45,9 +45,8 @@ object TextOps {
   }
 
   /** The per-language sampling rate (per-mille) — ONE definition shared
-    * by q46, the batch cascade ([[stagedDocs]]) and the streaming door
-    * ([[graft.streaming.CurateDoor]] via `IngestClean.withRates`), so
-    * the door admits exactly the batch pipeline's sample. */
+    * by q46 and the batch cascade ([[stagedDocs]]), so both keep exactly
+    * the same sample. */
   private[graft] def sampleRate(lang: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     when(lang === "en", 500L).otherwise(200L)
 
@@ -952,8 +951,8 @@ object TextOps {
     * pipeline ([[graft.app.CleanPipeline]]): every document of the input
     * corpus plus its cleaning `stage` (dup / repetition / quality /
     * sample / kept — first failing stage wins) and the `quality` score,
-    * deliberately retained as an observability signal (IngestClean's
-    * convention). Filtering `stage = kept` yields the publishable corpus;
+    * deliberately retained as an observability signal. Filtering
+    * `stage = kept` yields the publishable corpus;
     * aggregating yields q54. */
   def stagedDocs(d: DataFrame): DataFrame = {
     val s = d.sparkSession
@@ -970,8 +969,7 @@ object TextOps {
     // second text scan plus two shingle-volume shuffles for a number
     // computable where the row already is. [[graft.functions.ShingleStats]]
     // (one codegen pass per doc, proven equal to the exploded q48 signal
-    // by spec) is the same expression the STREAMING twin (IngestClean)
-    // already uses — batch and stream now share one implementation.
+    // by spec) is the one implementation of the repetition signal.
     // <3-token docs have zero shingles ⇒ 0.0.
     withCanon
       .withColumn("_ss", graft.functions.ShingleStats($"text"))

@@ -17,8 +17,13 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * batched bodies (InfluxDB accepts batched lines natively), which is the
   * same observable rows with O(batch) instead of O(row) connections.
   * Delivery is at-least-once under checkpointing (an upgrade over the
-  * reference's at-most-once error-swallowing; errors are logged and the
-  * batch retried by the engine).
+  * reference's at-most-once error-swallowing). A failed POST (connection
+  * error or HTTP status >= 300) is logged and fails its task. Under
+  * `local[*]` `spark.task.maxFailures` is 1, so the task is not retried:
+  * the `foreachBatch` call throws, the query stops, `Main`'s
+  * `awaitTermination` rethrows and the process exits. The epoch stays
+  * uncommitted, and a restart on the same checkpoint replays it whole
+  * (chunks that were already accepted are sent again).
   *
   * Credentials: the reference's client authenticates as dbuser/dbpassword
   * (default root/root, __main__.py:1053-1059); InfluxDB 1.x accepts the
@@ -90,7 +95,7 @@ object InfluxLineSink {
           } catch {
             case e: Exception =>
               System.err.println(s"[influx-sink] write failed: ${e.getMessage}")
-              throw e // let the engine retry the batch (at-least-once)
+              throw e // fails the epoch; a restart replays it
           }
         }
     }

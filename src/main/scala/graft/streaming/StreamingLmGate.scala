@@ -19,10 +19,9 @@ import graft.operators.TextOps
   * The door admits a document iff its frozen-model score ≥ its
   * language's cut.
   *
-  * Documented stream-semantic divergences (the CurateDoor convention —
-  * candidate-grade decisions at the door, exact ones at the next batch
-  * refresh): (1) a new doc scoring EXACTLY on the boundary is admitted,
-  * while the batch tercile could rank a boundary TIE into the tail by
+  * Documented stream-semantic divergences (candidate-grade decisions at
+  * the door, exact ones at the next batch refresh): (1) a new doc
+  * scoring EXACTLY on the boundary is admitted, while the batch tercile could rank a boundary TIE into the tail by
   * doc_id — conservative in the admit direction; (2) a language absent
   * from the cuts table (never seen at refresh) is admitted un-gated — no
   * evidence is not evidence of junk; (3) the gate drifts as the true
@@ -31,8 +30,7 @@ import graft.operators.TextOps
   *
   * Scale shape: scoring a micro-batch is batch-sized work against three
   * broadcast model frames (zero streaming state — the only restart
-  * state is the source offset log), the same stream-static shape as
-  * StreamingSpanStrip.
+  * state is the source offset log): a stream-static shape.
   */
 object StreamingLmGate {
 

@@ -6,10 +6,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 
 import graft.functions.MinHashSig
 
-/** Streaming NEAR-dup candidate detection — q36's ingestion-time twin,
-  * completing the streaming dedup family (StreamingDedup catches only
-  * byte-exact content): every incoming document is MinHash-banded and
-  * checked against the band buckets seen so far; a document landing in a
+/** Streaming NEAR-dup candidate detection — q36's ingestion-time twin:
+  * every incoming document is MinHash-banded and checked against the
+  * band buckets seen so far; a document landing in a
   * bucket that already has an owner raises a candidate alert naming the
   * owner — the crawl-time "this is probably a near-copy of X" signal a
   * pipeline uses to queue verification (exact Jaccard, q35's formula)
@@ -87,8 +86,8 @@ object StreamingNearDup {
     * any within-batch arrival order); the owner never changes afterwards
     * (until TTL eviction, when configured), so every later arrival —
     * including one with a smaller id — alerts against it (stream
-    * semantics: first content in wins, like StreamingDedup). A re-sent
-    * owner never alerts. */
+    * semantics: first content in wins). A re-sent owner never
+    * alerts. */
   private def collide(ttlMs: Option[Long])(key: (Int, String),
       rows: Iterator[(Long, Int, String)],
       state: GroupState[Long]): Iterator[(Long, Long, Int, String)] = {

@@ -27,7 +27,7 @@ import graft.operators.Classifier
   * explode into the bounded ≤257-rows/doc feature frame, the 257 weights
   * as a codegen array literal (zero joins, zero streaming state — the
   * only restart state is the source offset log), the same stream-static
-  * shape as StreamingLmGate/StreamingSpanStrip.
+  * shape as StreamingLmGate.
   */
 object StreamingQualityGate {
 

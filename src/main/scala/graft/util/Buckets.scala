@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions.expr
 
 /** THE deterministic hash bucket every sampling/split operator shares
   * (q46 sampling, q54 cascade, q57 splits, q59 rebalancing, q60
-  * decontamination, IngestClean): bucket = first-8-hex-chars of
+  * decontamination): bucket = first-8-hex-chars of
   * md5(id-as-string) mod 1000. One definition — the cross-query
   * consistency guarantee (a document lands in the same bucket in every
   * operator, engine, re-run and partitioning) depends on every site

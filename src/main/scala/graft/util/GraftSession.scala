@@ -3,7 +3,7 @@ package graft.util
 import org.apache.spark.sql.SparkSession
 
 /** One place for the engine's recommended session settings so every entry
-  * point (Verify / Bench / tests / the daemon) agrees:
+  * point (Verify / Profile / tests / the daemon) agrees:
   * shuffle parallelism sized to the machine (not the 200 default), AQE on
   * (runtime re-plan + skew-join at scale), nanosAsLong (legacy
   * TIMESTAMP(NANOS) events data), inferTimestampNTZ off (current

@@ -32,8 +32,9 @@ import org.apache.spark.storage.StorageLevel
   * Every materialized frame is also tracked in a registry (ADVICE r16:
   * the ad-hoc checkpoints were never unpersisted, so blocks accumulated
   * across a 148-query Verify session until GC). [[clear]] — wired into
-  * `Dedup.clearCaches()`, which Bench/Verify/Profile/PlanDump already
-  * call per measured pass / per query — unpersists them eagerly. The
+  * `Dedup.clearCaches()`, which Verify/Profile/PlanDump and perfbench's
+  * analytics helper call per measured pass / per query — unpersists
+  * them eagerly. The
   * registry holds weak references: a frame that becomes unreachable
   * between clears stays eligible for the ContextCleaner's normal
   * GC-driven reclaim instead of being pinned by the registry.

@@ -563,41 +563,6 @@ class PublishSpec extends AnyFunSuite {
     } finally saved.foreach { case (k, v) => c.set(k, v) }
   }
 
-  /** Span-strip gram index persistence: the h-bucketed saved index must
-    * strip a batch IDENTICALLY to the inline-derived gram set — the
-    * build-once/query-many contract (a serving restart loads the table
-    * instead of re-scanning the corpus). */
-  test("persisted gram index strips identically to the inline gram set") {
-    import spark.implicits._
-    import graft.streaming.StreamingSpanStrip
-    val corpus = graft.util.Tables(spark, dir, "documents")
-      .select($"doc_id", $"text")
-    if (!spark.catalog.tableExists("gram_idx")) {
-      cleanTableLocation("gram_idx")
-      StreamingSpanStrip.saveGramIndex(corpus, "gram_idx", buckets = 8)
-    }
-    // batch: 30 verbatim re-sends (every span known) + 30 disjoint-vocab
-    // novel docs (nothing known)
-    val batch = corpus.filter($"doc_id" < 30)
-      .select(($"doc_id" + 5000L).as("doc_id"), $"text")
-      .union(corpus.filter($"doc_id" < 30)
-        .select(($"doc_id" + 6000L).as("doc_id"),
-          org.apache.spark.sql.functions.expr(
-            "concat_ws(' ', transform(split(text, ' '), t -> concat(t, '_n')))")
-            .as("text")))
-    def rows(grams: org.apache.spark.sql.DataFrame) =
-      StreamingSpanStrip.strippedBatch(batch, grams).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
-        .sortBy(_._1).toSeq
-    val inline = rows(StreamingSpanStrip.corpusGrams(corpus))
-    val loaded = rows(StreamingSpanStrip.loadGramIndex(spark, "gram_idx"))
-    assert(inline == loaded, "loaded index diverges from inline gram set")
-    // the mix behaves: every long-enough re-send stripped, novel intact
-    val re = loaded.filter(t => t._1 < 6000L && t._2 >= graft.operators.Dedup.DupSpanWidth)
-    assert(re.nonEmpty && re.forall(t => t._3 == t._2), "re-sends not fully stripped")
-    assert(loaded.filter(_._1 >= 6000L).forall(_._3 == 0L), "novel docs touched")
-  }
-
   /** VERDICT r4 #6: q80's production shape — diff two REAL published
     * snapshots. Each side is ONE bucketed scan, the content-hash FULL
     * OUTER join reuses the bucket distribution (no shuffle exchange

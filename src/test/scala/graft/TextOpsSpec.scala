@@ -142,7 +142,7 @@ class TextOpsSpec extends AnyFunSuite {
     * deterministically. This test originally CAUGHT a real crash: the
     * quality score divides by length(text), and under ANSI mode (the
     * Spark 4 default) an empty document threw DIVIDE_BY_ZERO through
-    * q31/q54/q69/IngestClean — all four now guard empty text as
+    * q31/q54/q69 — all three now guard empty text as
     * quality/fraction 0 (junk by definition, dropped at the quality
     * stage instead of killing the job). */
   test("stagedDocs survives empty and sub-width documents") {
