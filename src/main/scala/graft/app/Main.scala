@@ -98,6 +98,39 @@ object AppConfig {
   * (__main__.py:1199-1206) — except the ingest is restart-safe via
   * checkpointing. */
 object Main {
+  /** The daemon's state store and checkpoint path; the specs' session
+    * applies the same map.
+    *
+    * Keyed state (per-station calibration, TelemetryProcessor) lives in
+    * the RocksDB store: off-heap and disk-spillable — at 100× station
+    * cardinality the default HDFS-backed store holds every version on-heap
+    * and OOMs first. The provider is part of the checkpoint format: a
+    * checkpoint written by the HDFS provider cannot be resumed under
+    * RocksDB (start a fresh checkpoint dir to migrate).
+    *
+    * Changelog checkpointing (off in Spark 4.1.2) makes each micro-batch
+    * write one small `.changelog` per state partition instead of a full
+    * snapshot (SST files + zip); the maintenance thread snapshots every
+    * 10th version. Each batch then writes: the offset and commit log
+    * entries, the sink's epoch marker and the changelogs. A checkpoint
+    * from before this setting resumes under it, and one written under it
+    * resumes with it off again (the store replays the changelogs).
+    *
+    * The default FileContext checkpoint manager forks `readlink` on every
+    * rename without libhadoop; the FileSystem-based one checks that the
+    * target is absent, then calls `FileSystem.rename`. On HDFS that is the
+    * non-overwriting `ClientProtocol.rename` (false if the target exists),
+    * so a second writer still fails; on a local disk both managers check,
+    * then rename. [[graft.util.NioLocalFileSystem]] sets file modes
+    * without forking `chmod`. */
+  val sessionConf: Map[String, String] = Map(
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true",
+    "spark.sql.streaming.checkpointFileManagerClass" ->
+      "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager",
+    "spark.hadoop.fs.file.impl" -> classOf[graft.util.NioLocalFileSystem].getName)
+
   def main(args: Array[String]): Unit = {
     val cfg = try AppConfig.parse(args) catch {
       case e: AppConfig.CliError =>
@@ -121,19 +154,7 @@ object Main {
       .config("spark.sql.shuffle.partitions",
         sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
       .config("spark.sql.session.timeZone", "UTC")
-      // keyed state (per-station calibration, TelemetryProcessor) lives in the
-      // RocksDB store: off-heap and disk-spillable — at 100× station
-      // cardinality the default HDFS-backed store holds every version
-      // on-heap and OOMs first. Every micro-batch commits a snapshot
-      // checkpoint of each state partition (new SST files + metadata):
-      // changelog checkpointing is off, Spark 4.1.2's default, since
-      // spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing
-      // .enabled is not set here. NOTE: the
-      // provider is part of the checkpoint format — a pre-existing
-      // checkpoint written by the HDFS provider cannot be resumed under
-      // RocksDB (start a fresh checkpoint dir to migrate).
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      .config(sessionConf)
       .getOrCreate()
     spark.sparkContext.setLogLevel(if (cfg.debug) "DEBUG" else "WARN")
 

@@ -26,13 +26,15 @@ import graft.parse.AprsWireParser
   * callsign+passcode login (the public APRS-IS checksum), full-feed port,
   * `immortal=True` auto-reconnect — here a driver-side reader thread that
   * appends raw frames to an offset-indexed buffer. Each micro-batch ships
-  * the raw frame strings to executors, where [[AprsWireParser]] runs —
+  * the raw frames to executors (one UTF-8 block per partition, see
+  * [[AprsIsPartition]]), where [[AprsWireParser]] runs —
   * parsing is distributed; the driver only buffers bytes. Backpressure =
   * micro-batch pacing + `maxFramesPerTrigger`.
   *
   * Options: host (default rotate.aprs.net), port (10152 full feed),
-  * callsign (nocall), reconnectMs, maxFramesPerTrigger, partitionsPerBatch,
-  * maxBufferedFrames.
+  * callsign (nocall), reconnectMs, maxFramesPerTrigger,
+  * partitionsPerBatch (a cap, default 4: a batch plans one partition per
+  * 10,000 frames, at most this many), maxBufferedFrames.
   */
 class AprsIsDataSource extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
@@ -46,6 +48,10 @@ object AprsIsSource {
   /** packet schema + `_seq`: the arrival index that gives the calibration
     * state its reference-faithful per-station ordering. */
   val fullSchema: StructType = AprsSchema.schema.add("_seq", LongType)
+
+  /** A micro-batch gets one parse partition per this many frames, up to
+    * `partitionsPerBatch`. */
+  private[sources] val FramesPerPartition = 10000
 
   /** APRS-IS login passcode — the public checksum over the base callsign. */
   def passcode(callsign: String): Int = {
@@ -220,18 +226,21 @@ class AprsIsMicroBatchStream(options: CaseInsensitiveStringMap)
       if (hi <= lo) (Array.empty[String], s)
       else (buf.slice(lo, hi).toArray, dropped + lo)
     }
-    // split the batch so executor-side parsing is not a single task — a
-    // single TCP feed is inherently one buffer on the driver, but the
+    // split a large batch so executor-side parsing is not a single task —
+    // a single TCP feed is inherently one buffer on the driver, but the
     // parse work distributes (SURVEY §2.8; VERDICT r1 "multi-partition
-    // micro-batches")
-    if (frames.isEmpty) Array(AprsIsPartition(Array.empty, firstSeq))
+    // micro-batches"). A small live batch stays one task: each extra
+    // task is fixed scheduling cost for a few hundred frames.
+    if (frames.isEmpty) Array(new AprsIsPartition(Array.empty[String], firstSeq))
     else {
-      val n = math.min(partitionsPerBatch, frames.length)
+      val wanted = (frames.length + AprsIsSource.FramesPerPartition - 1) /
+        AprsIsSource.FramesPerPartition
+      val n = math.min(partitionsPerBatch, wanted)
       val per = (frames.length + n - 1) / n
       (0 until n).map { p =>
         val lo = p * per
         val hi = math.min(frames.length, lo + per)
-        AprsIsPartition(frames.slice(lo, hi), firstSeq + lo): InputPartition
+        new AprsIsPartition(frames.slice(lo, hi), firstSeq + lo): InputPartition
       }.toArray
     }
   }
@@ -251,8 +260,48 @@ class AprsIsMicroBatchStream(options: CaseInsensitiveStringMap)
   override def stop(): Unit = { running = false; reader.interrupt() }
 }
 
-case class AprsIsPartition(frames: Array[String], startSeq: Long)
-    extends InputPartition
+/** One parse task's frames; `startSeq` is the first frame's `_seq`.
+  *
+  * Spark serializes every partition of a micro-batch into the task binary
+  * of each of the batch's stages: the scan node keeps its partitions in a
+  * non-transient field, and each stage's closures reach it through the
+  * plan. Each task deserializes that binary, so the frames travel as one
+  * UTF-8 block with a '\n' after each frame (one array copy) rather than
+  * as one serialized object per frame, and are decoded only where a
+  * reader reads them. A frame holds no '\n' (the feed is read a line at
+  * a time), so the separator is unambiguous. */
+final class AprsIsPartition private (block: Array[Byte], val startSeq: Long)
+    extends InputPartition {
+  def this(frames: Array[String], startSeq: Long) =
+    this(AprsIsPartition.encode(frames), startSeq)
+
+  /** The frames in arrival order, decoded one at a time. */
+  def lines: Iterator[String] = new Iterator[String] {
+    private var pos = 0
+    override def hasNext: Boolean = pos < block.length
+    override def next(): String = {
+      var end = pos
+      while (block(end) != '\n') end += 1
+      val line = new String(block, pos, end - pos, StandardCharsets.UTF_8)
+      pos = end + 1
+      line
+    }
+  }
+
+  /** The frames in arrival order. */
+  def frames: Array[String] = lines.toArray
+}
+
+object AprsIsPartition {
+  private def encode(frames: Array[String]): Array[Byte] = {
+    val sb = new java.lang.StringBuilder(frames.length * 96)
+    frames.foreach { f =>
+      require(f.indexOf('\n') < 0, s"a frame holds a line break: $f")
+      sb.append(f).append('\n')
+    }
+    sb.toString.getBytes(StandardCharsets.UTF_8)
+  }
+}
 
 class AprsIsReaderFactory extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
@@ -260,17 +309,18 @@ class AprsIsReaderFactory extends PartitionReaderFactory {
     new PartitionReader[InternalRow] {
       private val toCatalyst = CatalystTypeConverters
         .createToCatalystConverter(AprsIsSource.fullSchema)
-      private var i = -1
+      private val frames = p.lines
+      private var seq = p.startSeq - 1
       private var current: InternalRow = _
       override def next(): Boolean = {
         // executors parse; malformed frames drop silently (reference
         // contract, __main__.py:86-89)
-        while (i + 1 < p.frames.length) {
-          i += 1
-          AprsWireParser.parse(p.frames(i)) match {
+        while (frames.hasNext) {
+          val frame = frames.next()
+          seq += 1
+          AprsWireParser.parse(frame) match {
             case Some(row) =>
-              val withSeq = org.apache.spark.sql.Row.fromSeq(
-                row.toSeq :+ (p.startSeq + i))
+              val withSeq = org.apache.spark.sql.Row.fromSeq(row.toSeq :+ seq)
               current = toCatalyst(withSeq).asInstanceOf[InternalRow]
               return true
             case None => // skip

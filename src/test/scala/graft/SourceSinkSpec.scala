@@ -7,8 +7,11 @@ import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import org.scalatest.funsuite.AnyFunSuite
 
+import org.apache.spark.sql.connector.read.streaming.ReadLimit
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
+
 import graft.sinks.InfluxLineSink
-import graft.sources.AprsIsSource
+import graft.sources.{AprsIsMicroBatchStream, AprsIsPartition, AprsIsSource, SeqOffset}
 import graft.streaming.TelemetryProcessor
 import org.apache.spark.sql.functions._
 
@@ -93,16 +96,9 @@ class SourceSinkSpec extends AnyFunSuite {
     }
   }
 
-  test("aprsis source: checkpoint restart fast-forwards, batches split into partitions") {
-    import org.apache.spark.sql.connector.read.streaming.ReadLimit
-    import org.apache.spark.sql.util.CaseInsensitiveStringMap
-    import graft.sources.{AprsIsMicroBatchStream, AprsIsPartition, SeqOffset}
-
-    val frames = Seq(
-      "N0CALL>APRS:!4903.50N/07201.75W-ff one",
-      "N0CALL>APRS:!4903.50N/07201.75W-ff two",
-      "N0CALL>APRS:!4903.50N/07201.75W-ff three",
-      "DIGI-1>BEACON:ff four")
+  /** A stub APRS-IS server for one connection: reads the login line,
+    * sends `frames`, then holds the connection open. */
+  private def feedOnce(frames: => Iterator[String]): ServerSocket = {
     val server = new ServerSocket(0)
     val serverThread = new Thread {
       override def run(): Unit = {
@@ -117,72 +113,105 @@ class SourceSinkSpec extends AnyFunSuite {
     }
     serverThread.setDaemon(true)
     serverThread.start()
+    server
+  }
 
-    val opts = new java.util.HashMap[String, String]()
-    opts.put("host", "127.0.0.1")
-    opts.put("port", server.getLocalPort.toString)
-    opts.put("reconnectMs", "100")
-    opts.put("partitionsPerBatch", "2")
-    val stream = new AprsIsMicroBatchStream(new CaseInsensitiveStringMap(opts))
+  private def streamOn(server: ServerSocket, opts: (String, String)*) = {
+    val m = new java.util.HashMap[String, String]()
+    (Seq("host" -> "127.0.0.1", "port" -> server.getLocalPort.toString,
+      "reconnectMs" -> "100") ++ opts).foreach { case (k, v) => m.put(k, v) }
+    new AprsIsMicroBatchStream(new CaseInsensitiveStringMap(m))
+  }
+
+  /** Polls the source until `n` frames past `start` are buffered. */
+  private def awaitTip(stream: AprsIsMicroBatchStream, start: SeqOffset,
+      n: Long): SeqOffset = {
+    val deadline = System.currentTimeMillis() + 45000
+    def tip() = stream.latestOffset(start, ReadLimit.maxRows(1000000))
+      .asInstanceOf[SeqOffset]
+    var t = tip()
+    assert(t.n >= start.n, s"offset moved backwards: $t")
+    while (t.n < start.n + n && System.currentTimeMillis() < deadline) {
+      Thread.sleep(100)
+      t = tip()
+    }
+    t
+  }
+
+  test("aprsis source: checkpoint restart fast-forwards, batches split into partitions") {
+    val server = feedOnce(Iterator.tabulate(20001)(i =>
+      s"N0CALL>APRS:!4903.50N/07201.75W-ff $i"))
+    val stream = streamOn(server, "partitionsPerBatch" -> "2")
     try {
       // restart scenario: checkpoint said offset 100 but this process has
       // an empty in-memory buffer. latestOffset must never move backwards
       // (ADVICE r1 medium) — new frames renumber from the recovered base.
       val start = SeqOffset(100L)
-      val first = stream.latestOffset(start, ReadLimit.maxRows(10))
-        .asInstanceOf[SeqOffset]
-      assert(first.n >= 100L, s"offset moved backwards: $first")
-      val deadline = System.currentTimeMillis() + 45000
-      var tip = first
-      while (tip.n < 104L && System.currentTimeMillis() < deadline) {
-        Thread.sleep(100)
-        tip = stream.latestOffset(start, ReadLimit.maxRows(10))
-          .asInstanceOf[SeqOffset]
-      }
-      assert(tip.n == 104L, s"expected 4 frames after offset 100, got $tip")
-      // micro-batch splits into partitionsPerBatch partitions with
-      // contiguous _seq ranges (VERDICT r1 item 9)
+      val tip = awaitTip(stream, start, 20001)
+      assert(tip.n == 20101L, s"expected 20,001 frames after offset 100, got $tip")
+      // a batch past 10,000 frames splits into partitionsPerBatch
+      // partitions with contiguous _seq ranges (VERDICT r1 item 9)
       val parts = stream.planInputPartitions(start, tip)
       assert(parts.length == 2, parts.length)
       val p0 = parts(0).asInstanceOf[AprsIsPartition]
       val p1 = parts(1).asInstanceOf[AprsIsPartition]
-      assert(p0.startSeq == 100L && p0.frames.length == 2)
-      assert(p1.startSeq == 102L && p1.frames.length == 2)
-      assert(p0.frames(0).contains("ff one") && p1.frames(1).contains("ff four"))
+      assert(p0.startSeq == 100L && p0.frames.length == 10001)
+      assert(p1.startSeq == 10101L && p1.frames.length == 10000)
+      assert(p0.frames(0).endsWith("-ff 0") && p1.frames.last.endsWith("-ff 20000"))
     } finally {
       stream.stop()
       server.close()
     }
   }
 
-  test("aprsis source: maxBufferedFrames bounds driver memory, _seq stays continuous") {
-    import org.apache.spark.sql.connector.read.streaming.ReadLimit
-    import org.apache.spark.sql.util.CaseInsensitiveStringMap
-    import graft.sources.{AprsIsMicroBatchStream, AprsIsPartition, SeqOffset}
-
-    val server = new ServerSocket(0)
-    val serverThread = new Thread {
-      override def run(): Unit = {
-        val s = server.accept()
-        val in = new BufferedReader(new InputStreamReader(s.getInputStream))
-        in.readLine() // login
-        val out = new OutputStreamWriter(s.getOutputStream, StandardCharsets.UTF_8)
-        (0 until 30).foreach(i =>
-          out.write(s"N0CALL>APRS:!4903.50N/07201.75W-ff msg$i\r\n"))
-        out.flush()
-        Thread.sleep(60000)
-      }
+  test("aprsis source: a small batch plans one parse partition") {
+    val server = feedOnce(Iterator.tabulate(4)(i =>
+      s"N0CALL>APRS:!4903.50N/07201.75W-small $i"))
+    val stream = streamOn(server) // partitionsPerBatch at its default, 4
+    try {
+      val tip = awaitTip(stream, SeqOffset(0L), 4)
+      assert(tip.n == 4L, tip)
+      val parts = stream.planInputPartitions(SeqOffset(0L), tip)
+      assert(parts.length == 1, parts.length)
+      val p = parts(0).asInstanceOf[AprsIsPartition]
+      assert(p.startSeq == 0L && p.frames.length == 4)
+    } finally {
+      stream.stop()
+      server.close()
     }
-    serverThread.setDaemon(true)
-    serverThread.start()
+  }
 
-    val opts = new java.util.HashMap[String, String]()
-    opts.put("host", "127.0.0.1")
-    opts.put("port", server.getLocalPort.toString)
-    opts.put("reconnectMs", "100")
-    opts.put("partitionsPerBatch", "1")
-    opts.put("maxBufferedFrames", "10")
-    val stream = new AprsIsMicroBatchStream(new CaseInsensitiveStringMap(opts))
+  test("aprsis source: a partition serializes as one UTF-8 block, frames and _seq intact") {
+    val frames = Array.tabulate(2000)(i => s"N0CALL>APRS:!4903.50N/07201.75W-blk $i") ++
+      Array("DL1ABC>APRS:>Grüße über 日本 ✓", "not a frame", "")
+    val bytes = new java.io.ByteArrayOutputStream()
+    val out = new java.io.ObjectOutputStream(bytes)
+    out.writeObject(new AprsIsPartition(frames, 42L))
+    out.close()
+    // one block: no per-frame object overhead (an Array[String] costs at
+    // least 3 more bytes a frame, 6 KB here)
+    val blockBytes = frames.map(_.getBytes(StandardCharsets.UTF_8).length + 1).sum
+    assert(bytes.size < blockBytes + 512, s"${bytes.size} serialized vs $blockBytes block")
+    val p = new java.io.ObjectInputStream(
+      new java.io.ByteArrayInputStream(bytes.toByteArray)).readObject()
+      .asInstanceOf[AprsIsPartition]
+    assert(p.startSeq == 42L)
+    assert(p.frames.sameElements(frames))
+    // the reader numbers every frame, parsed or dropped, from startSeq
+    val reader = new graft.sources.AprsIsReaderFactory().createReader(p)
+    val seqs = Iterator.continually(reader.next()).takeWhile(identity)
+      .map(_ => reader.get().getLong(AprsIsSource.fullSchema.length - 1)).toSeq
+    val parsed = frames.indices.filter(i => graft.parse.AprsWireParser.parse(frames(i)).isDefined)
+    assert(parsed.length >= 2000, parsed.length)
+    assert(seqs == parsed.map(42L + _))
+    intercept[IllegalArgumentException](new AprsIsPartition(Array("a\nb"), 0L))
+  }
+
+  test("aprsis source: maxBufferedFrames bounds driver memory, _seq stays continuous") {
+    val server = feedOnce(Iterator.tabulate(30)(i =>
+      s"N0CALL>APRS:!4903.50N/07201.75W-ff msg$i"))
+    val stream = streamOn(server, "partitionsPerBatch" -> "1",
+      "maxBufferedFrames" -> "10")
     try {
       // 30 frames arrive while nothing commits: the cap must evict the 20
       // oldest (counter observable), never grow the buffer past 10
@@ -215,33 +244,10 @@ class SourceSinkSpec extends AnyFunSuite {
     // observable), while this cap bounds a single micro-batch's SIZE by
     // leaving the excess buffered for the NEXT trigger (lossless). A
     // burst that fits the buffer must not land in one giant batch.
-    import org.apache.spark.sql.connector.read.streaming.ReadLimit
-    import org.apache.spark.sql.util.CaseInsensitiveStringMap
-    import graft.sources.{AprsIsMicroBatchStream, AprsIsPartition, SeqOffset}
-
-    val server = new ServerSocket(0)
-    val serverThread = new Thread {
-      override def run(): Unit = {
-        val s = server.accept()
-        val in = new BufferedReader(new InputStreamReader(s.getInputStream))
-        in.readLine() // login
-        val out = new OutputStreamWriter(s.getOutputStream, StandardCharsets.UTF_8)
-        (0 until 25).foreach(i =>
-          out.write(s"N0CALL>APRS:!4903.50N/07201.75W-ff burst$i\r\n"))
-        out.flush()
-        Thread.sleep(60000)
-      }
-    }
-    serverThread.setDaemon(true)
-    serverThread.start()
-
-    val opts = new java.util.HashMap[String, String]()
-    opts.put("host", "127.0.0.1")
-    opts.put("port", server.getLocalPort.toString)
-    opts.put("reconnectMs", "100")
-    opts.put("partitionsPerBatch", "1")
-    opts.put("maxFramesPerTrigger", "10")
-    val stream = new AprsIsMicroBatchStream(new CaseInsensitiveStringMap(opts))
+    val server = feedOnce(Iterator.tabulate(25)(i =>
+      s"N0CALL>APRS:!4903.50N/07201.75W-ff burst$i"))
+    val stream = streamOn(server, "partitionsPerBatch" -> "1",
+      "maxFramesPerTrigger" -> "10")
     try {
       // wait until the whole 25-frame burst is buffered (a probing
       // latestOffset with a huge explicit limit reads the true tip

@@ -13,10 +13,9 @@ object SparkTest {
       // match GraftSession: un-flagged timestamp[us] parquet reads as
       // TIMESTAMP (UTC), not TIMESTAMP_NTZ
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // the daemon's state store (Main); StreamingSpec asserts keyed
-      // state really runs on it
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      // the daemon's state store and checkpoint path; StreamingSpec
+      // asserts keyed state really runs on RocksDB
+      .config(graft.app.Main.sessionConf)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -24,11 +25,10 @@ class StreamingSpec extends AnyFunSuite {
     * own telemetry: only RocksDBStateStoreProvider reports rocksdb*
     * custom metrics in the state-operator progress. At 100× ingest the
     * provider is load-bearing: off-heap + disk-spillable state, no
-    * per-version on-heap map. (Changelog checkpointing stays at Spark's
-    * default, off: each batch commits a snapshot per state partition.) */
+    * per-version on-heap map. (The daemon turns changelog checkpointing
+    * on: each batch writes one changelog per state partition.) */
   private def assertRocksDbState(
       q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-    import scala.jdk.CollectionConverters._
     val keys = q.recentProgress.flatMap(_.stateOperators)
       .flatMap(_.customMetrics.keySet().asScala)
     assert(keys.exists(_.startsWith("rocksdb")),
@@ -83,6 +83,47 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
+  private lazy val aprsFixtures = scala.io.Source
+    .fromURL(getClass.getResource("/aprs_fixtures.jsonl")).getLines().toSeq
+  private lazy val aprsGolden = scala.io.Source
+    .fromURL(getClass.getResource("/aprs_golden.txt")).getLines()
+    .map(l => if (l == "\\N") None else Some(l)).toSeq
+
+  /** The daemon's calibration chain over a JSON file stream in `dir`, one
+    * file per micro-batch, collecting (`_idx`, line) into `got`. */
+  private def startCalibration(session: org.apache.spark.sql.SparkSession,
+      dir: java.nio.file.Path, ckpt: java.nio.file.Path,
+      got: java.util.Queue[(Long, Option[String])]) = {
+    val stream = session.readStream.schema(AprsSchema.schema.add("_idx", "long"))
+      .option("maxFilesPerTrigger", 1).json(dir.toString)
+    TelemetryProcessor.toLines(stream, "_idx").select($"_idx", $"line")
+      .writeStream
+      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+        batch.collect().foreach(r => got.add(r.getLong(0) -> Option(r.getString(1))))
+      }
+      .option("checkpointLocation", ckpt.toString)
+      .outputMode("append").start()
+  }
+
+  /** Writes `rows` as one file and runs the batch it makes. */
+  private def feedBatch(q: org.apache.spark.sql.streaming.StreamingQuery,
+      dir: java.nio.file.Path, name: String, rows: Seq[String]): Unit = {
+    Files.write(dir.resolve(name), rows.mkString("\n").getBytes)
+    q.processAllAvailable()
+    assertRocksDbState(q)
+  }
+
+  private def assertGoldens(got: java.util.Queue[(Long, Option[String])],
+      label: String): Unit = {
+    val rows = got.toArray(Array.empty[(Long, Option[String])])
+    assert(rows.length == aprsFixtures.size, s"$label: each row once")
+    val byIdx = rows.toMap
+    aprsGolden.zipWithIndex.foreach { case (expected, i) =>
+      assert(byIdx(i.toLong) == expected,
+        s"\n$label fixture #$i\n  expected: $expected\n  got: ${byIdx(i.toLong)}")
+    }
+  }
+
   /** The daemon's calibration operator over two micro-batches: batch 1
     * ends with KB1LQD's EQNS telemetry-message, batch 2 holds that
     * station's later telemetry, so the goldens only match if the keyed
@@ -92,53 +133,67 @@ class StreamingSpec extends AnyFunSuite {
     * over the reference's lost-on-restart dictionary). Both runs must
     * use the RocksDB store the daemon configures. */
   test("two-microbatch replay matches goldens, state crosses batches") {
-    val fixtures = scala.io.Source
-      .fromURL(getClass.getResource("/aprs_fixtures.jsonl")).getLines().toSeq
-    val golden = scala.io.Source
-      .fromURL(getClass.getResource("/aprs_golden.txt")).getLines()
-      .map(l => if (l == "\\N") None else Some(l)).toSeq
-    val (b1, b2) = fixtures.splitAt(16)
+    val (b1, b2) = aprsFixtures.splitAt(16)
     assert(b1.last.contains("\"tEQNS\"") && b1.last.contains("KB1LQD"),
       "batch 1 must end with KB1LQD's telemetry-message")
-    val schema = AprsSchema.schema.add("_idx", "long")
 
     for (restart <- Seq(false, true)) {
       val dir = Files.createTempDirectory("aprs_stream")
       val ckpt = Files.createTempDirectory("aprs_stream_ckpt")
       val got = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Option[String])]()
-      def startQuery() = {
-        val stream = spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).json(dir.toString)
-        TelemetryProcessor.toLines(stream, "_idx").select($"_idx", $"line")
-          .writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            batch.collect().foreach(r => got.add(r.getLong(0) -> Option(r.getString(1))))
-          }
-          .option("checkpointLocation", ckpt.toString)
-          .outputMode("append").start()
-      }
-      def feed(q: org.apache.spark.sql.streaming.StreamingQuery,
-          name: String, rows: Seq[String]): Unit = {
-        Files.write(dir.resolve(name), rows.mkString("\n").getBytes)
-        q.processAllAvailable()
-        assertRocksDbState(q)
-      }
-      val q1 = startQuery()
+      val q1 = startCalibration(spark, dir, ckpt, got)
       val q2 = try {
-        feed(q1, "batch1.json", b1)
+        feedBatch(q1, dir, "batch1.json", b1)
         assert(got.size == b1.size, s"restart=$restart: batch 1 rows all processed")
-        if (restart) { q1.stop(); startQuery() } else q1
+        if (restart) { q1.stop(); startCalibration(spark, dir, ckpt, got) } else q1
       } catch { case e: Throwable => q1.stop(); throw e }
-      try feed(q2, "batch2.json", b2) finally q2.stop()
+      try feedBatch(q2, dir, "batch2.json", b2) finally q2.stop()
+      assertGoldens(got, s"restart=$restart")
+    }
+  }
 
-      val rows = got.toArray(Array.empty[(Long, Option[String])])
-      assert(rows.length == fixtures.size, s"restart=$restart: each row once")
-      val byIdx = rows.toMap
-      golden.zipWithIndex.foreach { case (expected, i) =>
-        assert(byIdx(i.toLong) == expected,
-          s"\nrestart=$restart fixture #$i\n  expected: $expected\n  got: ${byIdx(i.toLong)}")
+  /** A checkpoint written before `Main.sessionConf` (snapshot checkpoints,
+    * FileContext manager) resumes under it, and one it wrote resumes under
+    * the old settings again. Batch 1 ends with KB1LQD's first EQNS, batch
+    * 2 holds the telemetry that needs it and the station's second EQNS,
+    * batch 3 the telemetry that needs that one: state crosses both
+    * switches. */
+  test("old checkpoint, new settings: resumes both ways, goldens match") {
+    import org.apache.spark.sql.classic.ClassicConversions.castToImpl
+    import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileContextBasedCheckpointFileManager}
+    val (b1, rest) = aprsFixtures.splitAt(16)
+    val (b2, b3) = rest.splitAt(2)
+    assert(b1.last.contains("\"tEQNS\"") && b2.last.contains("\"tEQNS\"") &&
+      b2.last.contains("KB1LQD") && b3.head.contains("KB1LQD"),
+      "each switch must fall between an EQNS and the telemetry it calibrates")
+    val before = spark.newSession()
+    before.conf.set(
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "false")
+    before.conf.set("spark.sql.streaming.checkpointFileManagerClass",
+      classOf[FileContextBasedCheckpointFileManager].getName)
+    val dir = Files.createTempDirectory("aprs_switch")
+    val ckpt = Files.createTempDirectory("aprs_switch_ckpt")
+    assert(CheckpointFileManager.create(new org.apache.hadoop.fs.Path(ckpt.toUri),
+      before.sessionState.newHadoopConf()).isInstanceOf[FileContextBasedCheckpointFileManager])
+    def stateFiles(suffix: String): Int =
+      if (!Files.exists(ckpt.resolve("state"))) 0
+      else {
+        val files = Files.walk(ckpt.resolve("state"))
+        try files.filter(_.toString.endsWith(suffix)).count().toInt finally files.close()
+      }
+    val got = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Option[String])]()
+    for ((session, name, rows) <- Seq((before, "batch1.json", b1),
+        (spark, "batch2.json", b2), (before, "batch3.json", b3))) {
+      val q = startCalibration(session, dir, ckpt, got)
+      val zips = stateFiles(".zip")
+      try feedBatch(q, dir, name, rows) finally q.stop()
+      if (session eq spark) assert(stateFiles(".changelog") > 0, "no changelog written")
+      else {
+        assert(stateFiles(".zip") > zips, s"$name: no snapshot under the old settings")
+        if (name == "batch1.json") assert(stateFiles(".changelog") == 0)
       }
     }
+    assertGoldens(got, "settings switched")
   }
 
   /** StreamingNearDup: MinHash band-bucket state survives a restart, an
@@ -234,6 +289,18 @@ class StreamingSpec extends AnyFunSuite {
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).json(dir.toString)
     Files.write(dir.resolve("b1.json"), doc(1, a).getBytes)
+    // every progress event, not q.recentProgress: that keeps only the
+    // last 100, and the no-data batches that drive expiry run back to
+    // back, so doc 1's batch can leave the window before doc 2's arrives
+    val progress = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.sql.streaming.StreamingQueryProgress]()
+    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
+      import org.apache.spark.sql.streaming.StreamingQueryListener._
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit = progress.add(e.progress)
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    spark.streams.addListener(listener)
     // TTL long enough that doc 3 (written right after doc 2's batch is
     // confirmed) lands WITHIN doc 2's window — only doc 1's idle gap
     // may expire
@@ -259,7 +326,7 @@ class StreamingSpec extends AnyFunSuite {
       // doc 2's TTL window, so act the moment doc 2's batch commits
       def awaitProcessed(n: Long): Unit = {
         val deadline = System.currentTimeMillis() + 90000
-        def total = q.recentProgress.map(_.numInputRows).sum
+        def total = progress.asScala.filter(_.id == q.id).map(_.numInputRows).sum
         while (total < n && System.currentTimeMillis() < deadline)
           Thread.sleep(100)
         assert(total >= n, s"only $total input rows processed, want $n")
@@ -272,7 +339,7 @@ class StreamingSpec extends AnyFunSuite {
       // cannot race a half-expired store and alert against owner 1.
       locally {
         val deadline = System.currentTimeMillis() + 90000
-        def removed = q.recentProgress
+        def removed = progress.asScala.filter(_.id == q.id)
           .map(_.stateOperators.map(_.numRowsRemoved).sum).sum
         while (removed < 4 && System.currentTimeMillis() < deadline)
           Thread.sleep(200)
@@ -293,7 +360,7 @@ class StreamingSpec extends AnyFunSuite {
       val got = awaitAlerts(4)
       assert(got.toSet == Set((3L, 2L)) && got.size == 4,
         s"doc 3 must alert against the NEW owner 2 in all 4 bands: $got")
-    } finally q.stop()
+    } finally { q.stop(); spark.streams.removeListener(listener) }
   }
 
   /** StreamingBm25: queries served against the SAVED postings index must
