@@ -41,40 +41,6 @@ object CleanPipeline {
     } finally staged.unpersist()
   }
 
-  /** The near-dup-aware variant: after the q54 stages, members of a q36
-    * near-dup component that are NOT the component's q65-chosen keeper
-    * (longest member, tie → min id) fall out as stage `neardup`. The
-    * keeper choice is cluster-wide and independent of the other stages —
-    * a cluster's keeper can itself be dropped by quality/sampling, which
-    * is the honest composition (choosing keepers only among survivors
-    * would make the keep-set depend on stage order). One extra join
-    * against the drop list; everything else identical to [[run]]. */
-  def runWithNearDup(spark: SparkSession, inDir: String, table: String,
-      buckets: Int = 32): DataFrame = {
-    import graft.operators.Dedup
-    val docs = Tables(spark, inDir, "documents")
-    // q65's keep decision per cluster, membership from the same memoized
-    // label pass (review finding r9)
-    val dropList = Dedup.nearDupDrops(spark, inDir)
-      .withColumn("neardup", lit(1))
-    val staged = TextOps.stagedDocs(docs)
-      .join(dropList, Seq("doc_id"), "left")
-      .withColumn("stage",
-        when(col("stage") === "kept" && col("neardup") === 1, "neardup")
-          .otherwise(col("stage")))
-      .persist()
-    try {
-      val kept = staged.filter(col("stage") === "kept")
-        .select("doc_id", "text", "source", "n_chars", "lang")
-      CorpusPublisher.publish(kept, table, buckets)
-      val acct = staged.groupBy(col("lang"), col("stage"))
-        .agg(count(lit(1)).as("n_docs"))
-        .orderBy(col("lang"), col("stage"))
-      val rows = acct.collect()
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), acct.schema)
-    } finally staged.unpersist()
-  }
-
   /** VERDICT r8 #7: the FULL published curation pipeline as one
     * spark-submit entry — every stage this engine implements, in the
     * order a training-data team runs them:
@@ -137,8 +103,8 @@ object CleanPipeline {
     // q118 stage knob (VERDICT r9 #4): CCNet's convention — drop the
     // per-language tail tercile of the bigram-LM quality score. Like
     // every drop stage here, the decision is computed on the FULL corpus
-    // (stage decisions are independent of stage order — the
-    // runWithNearDup composition rule) and joined as a doc-id-sized list
+    // (stage decisions are independent of stage order, so a keeper can
+    // itself fall to a later stage) and joined as a doc-id-sized list
     val lmTail =
       if (!lmTailFilter) None
       else Some(TextOps.lmTailDrops(docsAll).withColumn("lm_tail", lit(1)))

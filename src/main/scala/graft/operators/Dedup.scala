@@ -1109,11 +1109,11 @@ object Dedup {
     graft.util.Mat.clear()
   }
 
-  /** Fail fast on a fired LSH bucket cap (vs warn-only): set by Verify
-    * for oracle runs, or via SPARK_GRAFT_LSH_STRICT=1. */
+  /** Fail fast on a fired LSH bucket cap (vs warn-only): the
+    * `graft.lsh.strict=true` system property, which Verify sets for
+    * oracle runs. */
   private def strictCap: Boolean =
-    sys.props.get("graft.lsh.strict").contains("true") ||
-      sys.env.get("SPARK_GRAFT_LSH_STRICT").contains("1")
+    sys.props.get("graft.lsh.strict").contains("true")
 
   private def memberComponents(s: SparkSession, dir: String): DataFrame =
     componentCache.computeIfAbsent((s, dir),

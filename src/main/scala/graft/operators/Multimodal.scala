@@ -1,5 +1,4 @@
 package graft.operators
-import graft.util.Mat.Ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession, Row}
 import org.apache.spark.sql.functions._
@@ -133,12 +132,7 @@ object Multimodal {
           sqrt((lit(dim * dim) * col("ssq") - lit(dim) * col("t") * col("t"))
             .cast("double")))
         .otherwise(sqrt(col("ssq").cast("double"))))
-      // cl rides along for the index fit ([[savePerceptualIndex]]'s
-      // variance pass); the pair scans never carry it (gridPairs /
-      // blockKeys select their own slim column sets, so Catalyst prunes
-      // it before any exchange)
-      .select(col("doc_id"), col("decoder"), col("cl"), col("p"),
-        col("t"), col("nrm"))
+      .select(col("doc_id"), col("decoder"), col("p"), col("t"), col("nrm"))
   }
 
   /** The q117 pair scan over an arbitrary assets frame (factored so the
@@ -163,9 +157,7 @@ object Multimodal {
   }
 
   /** The complete sheared all-pairs sweep over a descriptor frame
-    * (doc_id, decoder, p, t, nrm): q117's join shape + exact verify —
-    * shared by the inline arm (fresh decode) and the saved-index arm's
-    * concentrated-corpus degradation (loaded descriptors, no decode).
+    * (doc_id, decoder, p, t, nrm): q117's join shape + exact verify.
     * Descriptors are CARRIED through the one grid join; a slim-pairs +
     * re-join formulation was measured 5× slower here (the re-join
     * shuffles the pair volume twice). */
@@ -209,212 +201,8 @@ object Multimodal {
       .orderBy($"decoder", $"i", $"j")
   }
 
-  // ------------------------------------- perceptual descriptor index
-  /** Value-grid multiprobe blocking over NORMALIZED descriptor
-    * components — the saved-index path for asset near-dup at corpus
-    * scale (VERDICT r11 #5). The PQ machinery is 64-dim-embedding
-    * geometry; descriptors are 8-float (real decoders) / 256-bin (stub)
-    * per family, and the near-dup threshold is extreme (cos ≥ 0.999),
-    * which gives a STRONGER tool than an approximate index: a provable
-    * candidate guarantee.
-    *
-    * Guarantee: cos(a, b) ≥ τ ⇒ ‖â − b̂‖₂ = √(2(1−τ)) ≤ 0.0448 at
-    * τ = 0.999, so every blocking component differs by < w/2 = 0.0625.
-    * Each row emits, per offset combo o ∈ {0, w/2}^k over k =
-    * [[PerceptualGridDims]] components, the key (⌊(y_d + o_d)/w⌋)_d —
-    * the two shifted grids' boundaries interleave every w/2, so an
-    * interval shorter than w/2 avoids the boundaries of one grid per
-    * dim: every qualifying pair shares at least one combo's key.
-    * Candidates ⊇ true pairs BY CONSTRUCTION (not measured recall);
-    * survivors are exact-verified with the q117 arithmetic, so the
-    * index sweep returns exactly the inline q117 pairs (spec-pinned).
-    *
-    * Blocking components are the [[PerceptualGridDims]] highest-variance
-    * normalized dimensions per decoder family, fitted at save time from
-    * exact integer sums (order-independent ⇒ the index is bit-stable
-    * under any partitioning) and persisted with the index. Fan-out is
-    * 2^k keys/row; a fat value-cell (mass concentrated in one bucket —
-    * a fact of same-generator corpora) is never dropped: its pairs are
-    * routed through the sheared [[Similarity.gridPairs]] join so the
-    * guarantee holds with no quadratic hot partition (see
-    * [[candidatePairs]]). */
-  val PerceptualGridW = 0.125
-  val PerceptualGridDims = 3
-  /** Per-(combo, cells) bucket cap — the q36 MaxBandBucket discipline
-    * at descriptor granularity. */
-  val PerceptualCellCap = 200L
-
-  private def dimOf: Column =
-    when(col("decoder") === "stub", lit(DecoderStub.featureDim.toLong))
-      .otherwise(lit(DescriptorDim.toLong))
-
-  /** Build + persist the descriptor index for an assets frame: ONE
-    * decode pass (the expensive step a saved index amortizes — payload
-    * reads + decoder work), descriptors to `$path/desc` (doc_id,
-    * decoder, p, t, nrm — the packed exact-integer form, payload-free),
-    * blocking meta to `$path/meta` (decoder, dims). */
-  def savePerceptualIndex(s: SparkSession, assetsDf: DataFrame,
-      indexPath: String): Unit = {
-    import s.implicits._
-    val qd = quantizedDescriptors(decodeFeatures(s, assetsDf))
-      .materialize()
-    // variance fit per (decoder, dim) over the SCALED normalized
-    // component ys = ⌊10⁴·z_d/‖z‖ + ½⌋: per-row IEEE on exact inputs,
-    // then exact integer sums — deterministic under any partitioning.
-    // Scale 10⁴ (not 10⁶ — review finding r12): |ys| ≤ 10⁴ keeps
-    // Σys² < 2⁶³ out to ~9·10¹⁰ descriptor rows per family (an ANSI
-    // overflow would abort the whole build at ~10⁷ rows under 10⁶),
-    // and 4 digits of y is ample resolution for RANKING variances
-    val fit = qd.filter($"nrm" > 0.0)
-      .select($"decoder", dimOf.as("dimn"), $"t", $"nrm",
-        posexplode($"cl").as(Seq("d", "c")))
-      .withColumn("z", when($"decoder" === "stub",
-        $"dimn" * $"c" - $"t").otherwise($"c"))
-      .withColumn("ys",
-        floor($"z".cast("double") / $"nrm" * 10000.0 + 0.5).cast("long"))
-      .groupBy($"decoder", $"d")
-      .agg(count(lit(1)).as("n"), sum($"ys").as("sy"),
-        sum($"ys" * $"ys").as("sy2"))
-      // v in double FROM the exact sums (deterministic); ranked per
-      // family, ties to the lowest dim
-      .withColumn("v", $"sy2".cast("double") / $"n" -
-        ($"sy".cast("double") / $"n") * ($"sy".cast("double") / $"n"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy($"decoder").orderBy($"v".desc, $"d".asc)
-    fit.withColumn("rk", row_number().over(w))
-      .filter($"rk" <= PerceptualGridDims)
-      .groupBy($"decoder")
-      .agg(sort_array(collect_list(struct($"rk", $"d"))).as("s"))
-      .select($"decoder", expr("transform(s, x -> x.d)").as("dims"))
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$indexPath/meta")
-    val desc = qd.select($"doc_id", $"decoder", $"p", $"t", $"nrm")
-    desc.write.mode("overwrite").parquet(s"$indexPath/desc")
-    // the blocking keys are a pure function of desc + meta: persist them
-    // ONCE (review finding r12) so serving never re-pays the index-sized
-    // explode per query batch — probes equi-join $path/keys directly
-    blockKeys(desc, loadPerceptualMeta(s, indexPath))
-      .select($"decoder" +: $"combo" +:
-        ((0 until PerceptualGridDims).map(i => col(s"k$i")) :+ $"doc_id"): _*)
-      .write.mode("overwrite").parquet(s"$indexPath/keys")
-  }
-
-  /** decoder → blocking dims, driver-sized. */
-  def loadPerceptualMeta(s: SparkSession,
-      indexPath: String): Map[String, Seq[Int]] =
-    s.read.parquet(s"$indexPath/meta").collect()
-      .map(r => r.getString(0) -> r.getSeq[Int](1).toSeq).toMap
-
-  /** Unpack component `d` (0-based) of the packed descriptor column
-    * `p` — two counts per long, hi first (the Pack32 layout). */
-  private def clComp(d: Int): Column =
-    if (d % 2 == 0)
-      expr(s"shiftrightunsigned(element_at(p, ${d / 2 + 1}), 32)")
-    else expr(s"element_at(p, ${d / 2 + 1}) & 4294967295")
-
-  /** Explode a descriptor frame to its 2^k multiprobe keys:
-    * (decoder, combo, k0..k(k−1)) + the carried descriptor columns.
-    * Zero-norm rows (failed decode → zero vector) emit nothing — their
-    * cosine is 0 by convention, below every threshold. */
-  private[graft] def blockKeys(desc: DataFrame,
-      meta: Map[String, Seq[Int]]): DataFrame = {
-    val k = PerceptualGridDims
-    val wCell = PerceptualGridW
-    if (meta.isEmpty) // empty corpus at save time: nothing to key
-      return desc.filter(lit(false))
-        .select(Seq(col("decoder"), lit(0).as("combo")) ++
-          (0 until k).map(i => lit(0).as(s"k$i")) ++
-          Seq(col("doc_id"), col("p"), col("t"), col("nrm")): _*)
-    // deterministic family order (Map iteration order is not)
-    val fams = meta.toSeq.sortBy(_._1)
-    val combos = (0 until (1 << k)).map { cb =>
-      val cells = (0 until k).map { i =>
-        val dimsByFam = fams.map { case (fam, dims) =>
-          (fam, dims.lift(i).getOrElse(0)) }
-        // per-family blocking dim i: a CASE over the (few) families
-        val comp = dimsByFam.tail.foldLeft(
-            when(col("decoder") === dimsByFam.head._1,
-              clComp(dimsByFam.head._2))) { case (acc, (fam, d)) =>
-          acc.when(col("decoder") === fam, clComp(d))
-        }.otherwise(lit(0L))
-        val z = when(col("decoder") === "stub",
-          dimOf * comp - col("t")).otherwise(comp)
-        val off = if ((cb & (1 << i)) == 0) 0.0 else wCell / 2.0
-        floor((z.cast("double") / col("nrm") + off) / wCell)
-          .cast("int").as(s"k$i")
-      }
-      struct(lit(cb).as("combo") +: cells: _*)
-    }
-    desc.filter(col("nrm") > 0.0)
-      .withColumn("x", explode(array(combos: _*)))
-      .select(Seq(col("decoder"), col("x.combo").as("combo")) ++
-        (0 until k).map(i => col(s"x.k$i").as(s"k$i")) ++
-        Seq(col("doc_id"), col("p"), col("t"), col("nrm")): _*)
-  }
-
-  /** Slim (decoder, i, j) candidate pairs of a keyed frame, or None
-    * when blocking cannot pay. The cells under [[PerceptualCellCap]]
-    * self-join directly (the common case: small buckets, one narrow
-    * exchange); cells OVER the cap are routed through
-    * [[Similarity.gridPairs]] WITH the cell as the group key — still
-    * every within-cell pair (the superset guarantee stays
-    * unconditional, nothing is dropped; a cap that DROPPED fat cells
-    * was measured at 0.67 recall at sf0.1), but an m-row cell shears
-    * into G² balanced tasks instead of one quadratic hot partition.
-    *
-    * None (degrade) when over-cap cells hold most key rows: on a
-    * concentrated same-generator corpus the bucket join generates
-    * nearly every pair 2^k times over — costlier than the complete
-    * grid it was meant to avoid. The caller then runs
-    * [[gridVerifiedPairs]] over the saved descriptors: the index's
-    * unconditional win (decode amortization) is kept, the blocking's
-    * conditional win is forfeited honestly and loudly. */
-  private def candidatePairs(keyed: DataFrame): Option[DataFrame] = {
-    val s = keyed.sparkSession
-    import s.implicits._
-    val k = PerceptualGridDims
-    val keyCols = Seq("decoder", "combo") ++ (0 until k).map(i => s"k$i")
-    val keyedCk = keyed.materialize() // feeds sizes + both joins
-    val sizes = keyedCk.groupBy(keyCols.map(col): _*)
-      .agg(count(lit(1)).as("bsz"))
-      .materialize()
-    val fat = sizes.filter($"bsz" > PerceptualCellCap)
-      .select(keyCols.map(col): _*)
-    val Seq(total, fatMass) = {
-      val m = sizes.agg(
-        sum($"bsz").as("tot"),
-        sum(when($"bsz" > PerceptualCellCap, $"bsz").otherwise(0L)).as("fm"))
-        .head()
-      Seq(if (m.isNullAt(0)) 0L else m.getLong(0),
-        if (m.isNullAt(1)) 0L else m.getLong(1))
-    }
-    if (total > 0 && fatMass * 2 > total) {
-      System.err.println(
-        s"[graft] perceptual index: $fatMass/$total key rows in over-cap " +
-          "value-cells — concentrated corpus, degrading to the complete " +
-          "sheared grid (decode stays amortized)")
-      return None
-    }
-    val nFat = fat.count()
-    if (nFat > 0) System.err.println(
-      s"[graft] perceptual index: $nFat value-cells over " +
-        s"$PerceptualCellCap rows routed through the sheared grid join")
-    val ok = keyedCk.join(fat, keyCols, "left_anti")
-    val a = ok.withColumnRenamed("doc_id", "i")
-    val b = ok.withColumnRenamed("doc_id", "j")
-    val okPairs = a.join(b, keyCols).filter($"i" < $"j")
-      .select($"decoder", $"i", $"j")
-    val fatRows = keyedCk.join(fat, keyCols, "left_semi")
-      .withColumnRenamed("doc_id", "vec_id")
-    val fatPairs = Similarity.gridPairs(fatRows, keyCols, Nil)
-      .select($"decoder", least($"ia", $"jb").as("i"),
-        greatest($"ia", $"jb").as("j"))
-    Some(okPairs.union(fatPairs).distinct()) // pairs collide ≤ 2^k times
-  }
-
   /** Exact q117 pair cosine from carried packed-descriptor columns
-    * (suffix `a`/`b`) — ONE definition shared by the inline grid scan
-    * and both index paths. */
+    * (suffix `a`/`b`). */
   private def pairCosine: Column = {
     val dim = DecoderStub.featureDim.toLong
     val pdot = graft.functions.DotPacked32(col("p_a"), col("p_b"))
@@ -422,83 +210,6 @@ object Multimodal {
         lit(dim * dim) * pdot - lit(dim) * col("t_a") * col("t_b"))
       .otherwise(pdot)
     Similarity.safeCos(dotz, col("nrm_a") * col("nrm_b"))
-  }
-
-  /** Exact-verify a slim (decoder, i, j) candidate frame: re-join the
-    * descriptor columns from `descA`/`descB` (doc-keyed, narrow joins)
-    * and keep pairs at ≥ [[PerceptualDupThreshold]]. Candidates arrive
-    * WITHOUT carried descriptors on purpose — a pair colliding in up to
-    * 2^k combos would otherwise push its ~2 KB packed vectors through
-    * the dedup shuffle once per collision; slim pairs dedup at 24
-    * bytes/row, then fetch each side's descriptor exactly once. */
-  private def verifyPairs(cands: DataFrame, descA: DataFrame,
-      descB: DataFrame): DataFrame = {
-    val s = cands.sparkSession
-    import s.implicits._
-    cands
-      .join(descA.select($"decoder", $"doc_id".as("i"), $"p".as("p_a"),
-        $"t".as("t_a"), $"nrm".as("nrm_a")), Seq("decoder", "i"))
-      .join(descB.select($"decoder", $"doc_id".as("j"), $"p".as("p_b"),
-        $"t".as("t_b"), $"nrm".as("nrm_b")), Seq("decoder", "j"))
-      .withColumn("cosine", pairCosine)
-      .filter($"cosine" >= PerceptualDupThreshold)
-      .select($"decoder", $"i", $"j", $"cosine")
-  }
-
-  /** The corpus near-dup sweep FROM the saved index — q117 without
-    * payloads or decoding: candidates from the multiprobe value-grid
-    * (superset of all ≥-threshold pairs by the blocking guarantee),
-    * exact-verified with the shared arithmetic. Output rows equal the
-    * inline [[q117PerceptualDedup]]'s pairs exactly (spec-pinned). */
-  def perceptualPairsFromIndex(s: SparkSession,
-      indexPath: String): DataFrame = {
-    import s.implicits._
-    // the desc/keys parquet is BYTE-small (packed descriptors) but
-    // ROW-heavy work: one 10 MB split would make the pair join a single
-    // streamed task under a BroadcastHashJoin (measured 7× the inline
-    // grid's wall clock) — spread across the session's parallelism
-    val desc = s.read.parquet(s"$indexPath/desc")
-      .repartition(s.sparkContext.defaultParallelism)
-    val keyed = s.read.parquet(s"$indexPath/keys")
-      .repartition(s.sparkContext.defaultParallelism)
-    candidatePairs(keyed) match {
-      case Some(cands) => verifyPairs(cands, desc, desc)
-      case None => gridVerifiedPairs(desc)
-    }
-  }
-
-  /** SERVE asset near-dup candidates for an incoming batch against the
-    * saved index: decode the BATCH only, key it with the saved blocking
-    * meta, probe the PERSISTED index keys by equi-join, exact-verify.
-    * Batch-sized work against a corpus-sized index — the index-side
-    * explode was paid once at save time. Output: (decoder, qid [batch],
-    * nid [index], cosine) for verified near-dups. Batch and index id
-    * spaces are independent: a batch doc whose id equals an index doc's
-    * id is matched like any other (re-serving an indexed asset reports
-    * its own indexed copy at cosine 1 — the honest answer to "is this
-    * asset already in the corpus?"). */
-  def servePerceptualMatches(s: SparkSession, indexPath: String,
-      batchAssets: DataFrame): DataFrame = {
-    import s.implicits._
-    val meta = loadPerceptualMeta(s, indexPath)
-    val keyCols = Seq("decoder", "combo") ++
-      (0 until PerceptualGridDims).map(i => s"k$i")
-    val batchDesc = quantizedDescriptors(decodeFeatures(s, batchAssets))
-      .select($"doc_id", $"decoder", $"p", $"t", $"nrm")
-      .materialize() // decode once: keys AND verification read it
-    val desc = s.read.parquet(s"$indexPath/desc")
-      .repartition(s.sparkContext.defaultParallelism) // see pairs path
-    val batchKeys = blockKeys(batchDesc, meta)
-      .select(keyCols.map(col) :+ $"doc_id".as("i"): _*)
-    // no repartition here (unlike the pairs path): the serve join's
-    // output is candidate-sized, not corpus-pair-sized — the slim keys
-    // scan needs no task fan-out, and an exchange would only add cost
-    val idxKeys = s.read.parquet(s"$indexPath/keys")
-      .withColumnRenamed("doc_id", "j")
-    val cands = batchKeys.join(idxKeys, keyCols)
-      .select($"decoder", $"i", $"j").distinct()
-    verifyPairs(cands, batchDesc, desc)
-      .select($"decoder", $"i".as("qid"), $"j".as("nid"), $"cosine")
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -983,8 +694,8 @@ object Multimodal {
     * byte-histogram descriptor instead of a real decode? Codec video is
     * a permanent, documented stub; this query makes the resulting
     * unusable-descriptor volume OPERATIONAL per corpus, so a mixed-asset
-    * ingest can't silently carry stub-graded descriptors into q117 / the
-    * perceptual index. One decode pass + one map-side-combined rollup;
+    * ingest can't silently carry stub-graded descriptors into q117.
+    * One decode pass + one map-side-combined rollup;
     * permille is integer floor-div (exact, oracle-replayable). The "ALL"
     * row is the corpus-level headline a dashboard alerts on. */
   def q139DecoderAudit(s: SparkSession, dir: String): DataFrame =

@@ -504,28 +504,6 @@ object Similarity {
   def q44AnnIvfRecall(s: SparkSession, dir: String): DataFrame =
     ivfRecallWith(s, dir, fitCentroids(s, dir, k = 16, iters = 2))
 
-  /** Persist a fitted IVF index (quantized centroids + norms) so the
-    * Lloyd fit runs ONCE and later sessions query against the saved
-    * model — the build-once / query-many shape a production ANN index
-    * needs (at 100 TB the fit scans the corpus per iteration; queries
-    * must not). Schema: (cid int, e array<long>, nrm double). */
-  def saveIvfIndex(s: SparkSession, dir: String, indexPath: String,
-      k: Int = 16, iters: Int = 2): Unit = {
-    import s.implicits._
-    fitCentroids(s, dir, k, iters).zipWithIndex
-      .map { case ((e, nrm), cid) => (cid, e, nrm) }
-      .toDF("cid", "e", "nrm")
-      .coalesce(1) // k rows — one file
-      .write.mode("overwrite").parquet(indexPath)
-  }
-
-  /** Load a saved IVF index in centroid order. */
-  def loadIvfIndex(s: SparkSession, indexPath: String): Seq[(Seq[Long], Double)] = {
-    import s.implicits._
-    s.read.parquet(indexPath).orderBy($"cid")
-      .select($"e", $"nrm").as[(Seq[Long], Double)].collect().toIndexedSeq
-  }
-
   /** The cell-assigned corpus frame (vec_id, e, nrm, cell) — the static
     * side every IVF query path probes. Assignment is map-side codegen
     * against literal centroids. */
@@ -540,35 +518,7 @@ object Similarity {
     base.withColumn("cell", assignCell(cents))
       .select(col("vec_id"), col("e"), col("nrm"), col("cell"))
 
-  /** The production IVF query path: ANN top-k against an explicit
-    * (normally loaded) centroid model, WITHOUT the exact arm — recall
-    * reporting is an audit tool, not something a query-many serving path
-    * recomputes per batch. This is what build-once/query-many actually
-    * runs. */
-  def ivfQuery(s: SparkSession, dir: String,
-      cents: Seq[(Seq[Long], Double)], k: Int = 5, nprobe: Int = 1): DataFrame = {
-    import s.implicits._
-    // an index fitted on an EMPTY corpus has no centroids — the degenerate
-    // load must yield an empty result, not an unresolvable array() argmax
-    if (cents.isEmpty)
-      return Seq.empty[(Long, Long, Long, Double)]
-        .toDF("qid", "nid", "rk", "sim")
-    val base = scaled(s, dir)
-    val assigned = assignedCorpus(s, dir, cents)
-    // each query probes its nprobe nearest cells (nprobe=1 ≡ the argmax
-    // cell): the query side fans out to |q|·nprobe broadcast rows; the
-    // corpus stays one map-side-assigned scan, so candidate volume —
-    // and only candidate volume — grows with nprobe
-    val q = explodeProbeCells(base.filter($"vec_id" < 10), cents, nprobe)
-      .select($"vec_id".as("qid"), $"e".as("qe"), $"nrm".as("qn"), $"qcell")
-    cosineTopK(assigned.join(broadcast(q),
-      $"vec_id" =!= $"qid" && $"cell" === $"qcell"), k)
-      .orderBy($"qid", $"rk")
-  }
-
-  /** q44's ANN + recall report against an explicit (possibly loaded)
-    * centroid model — the fit is deterministic, so the saved-index path
-    * must reproduce the inline-fit output bit for bit (spec-pinned).
+  /** q44's ANN + recall report against an explicit centroid model.
     * `nprobe` > 1 is the MULTIPROBE audit arm (q96): each query's
     * candidates come from its nprobe nearest cells instead of only the
     * argmax cell — recall rises with candidate volume, same plan shape. */
@@ -962,25 +912,6 @@ object Similarity {
     val enc = s.read.parquet(s"$indexPath/enc")
     pqAnn(scaled(s, dir), enc, cents, books, nprobe, shortlist, k, qids)
       .orderBy($"qid", $"rk")
-  }
-
-  /** Diversified SERVING from the saved compressed index:
-    * [[pqServeQuery]]'s top-[[MmrPool]] (ADC shortlist + exact re-rank
-    * over the persisted codes) fed through [[mmrDiversify]] — the
-    * re-rank a result page pays after retrieval (q129's loaded twin).
-    * Candidate vectors come from a pool-sized equi-join against the
-    * corpus, the same shortlist-fetch discipline the serve path itself
-    * uses; everything past the ADC scan is pool-bounded per query.
-    * Composes with the r13 `qids` restriction: a batch asking for a
-    * subset of the standing queries diversifies only those. */
-  def mmrServeQuery(s: SparkSession, dir: String, indexPath: String,
-      k: Int = MmrK, pool: Int = MmrPool,
-      nprobe: Int = MultiprobeNprobe, shortlist: Int = PqShortlist,
-      qids: Option[Seq[Long]] = None): DataFrame = {
-    import s.implicits._
-    val cand = pqServeQuery(s, dir, indexPath, pool, nprobe, shortlist, qids)
-      .select($"qid", $"nid", $"sim")
-    mmrDiversify(cand, scaled(s, dir), k).orderBy($"qid", $"rk")
   }
 
   private[graft] def ivfPqRecall(s: SparkSession, dir: String,

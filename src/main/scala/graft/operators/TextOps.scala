@@ -2041,22 +2041,18 @@ object TextOps {
     * two versions derive deterministically from the driver's table (the
     * q34 re-ingest idiom): the "previous" snapshot lacks buckets 0–9
     * (1% new docs), the "current" drops buckets ≥ 990 (1% deletions) and
-    * edits buckets 500–509 (1% changed text). In production the two
-    * sides are two REAL snapshot tables (one scan each) — that shape is
-    * [[snapshotDiffTables]], over two CorpusPublisher outputs with a
-    * bucket-reusing exchange-free join; here both versions derive from
+    * edits buckets 500–509 (1% changed text). Both versions derive from
     * the driver's single table, so the plan scans it twice (the
     * md5-bucket filters are expressions, not pushable predicates — same
-    * as q34's re-ingest union). Either way the join carries only
-    * (doc_id, lang, 128-bit hash) — never text. */
+    * as q34's re-ingest union). The join carries only (doc_id, lang,
+    * 128-bit hash) — never text. */
   def q80SnapshotDiff(s: SparkSession, dir: String): DataFrame = {
     val d = docs(s, dir)
     snapshotDiffAgg(snapshotDiffRows(snapshotV1(d), snapshotV2(d)))
   }
 
-  /** The "previous" deterministic corpus version (q80's derivation),
-    * text-level so it can also be WRITTEN as a real snapshot table. */
-  private[graft] def snapshotV1(d: DataFrame): DataFrame = {
+  /** The "previous" deterministic corpus version (q80's derivation). */
+  private def snapshotV1(d: DataFrame): DataFrame = {
     val s = d.sparkSession
     import s.implicits._
     d.withColumn("bucket", graft.util.Buckets.mod1000("doc_id"))
@@ -2065,7 +2061,7 @@ object TextOps {
   }
 
   /** The "current" deterministic corpus version (q80's derivation). */
-  private[graft] def snapshotV2(d: DataFrame): DataFrame = {
+  private def snapshotV2(d: DataFrame): DataFrame = {
     val s = d.sparkSession
     import s.implicits._
     d.withColumn("bucket", graft.util.Buckets.mod1000("doc_id"))
@@ -2077,10 +2073,7 @@ object TextOps {
 
   /** Per-doc diff classification of two `(doc_id, lang, text)` snapshot
     * sides: hash in each side's scan projection (the join carries only
-    * (doc_id, lang, 128-bit hash) — never text), FULL OUTER on doc_id.
-    * When both sides are CorpusPublisher tables bucketed on doc_id, this
-    * join reuses the bucket distribution — NO shuffle exchange below the
-    * join (PublishSpec pins it). */
+    * (doc_id, lang, 128-bit hash) — never text), FULL OUTER on doc_id. */
   private[graft] def snapshotDiffRows(v1: DataFrame, v2: DataFrame): DataFrame = {
     val s = v1.sparkSession
     import s.implicits._
@@ -2102,15 +2095,6 @@ object TextOps {
       .agg(count(lit(1)).as("n"))
       .orderBy($"lang", $"status")
   }
-
-  /** q80 over two REAL published snapshots (VERDICT r4 #6): the
-    * production shape, where each version is a CorpusPublisher table —
-    * ONE bucketed scan per side (no derived-twice-from-one-table scan
-    * duplication) and the content-hash FULL OUTER join runs without a
-    * shuffle exchange because both tables are bucketed on doc_id. */
-  def snapshotDiffTables(s: SparkSession, v1Table: String,
-      v2Table: String): DataFrame =
-    snapshotDiffAgg(snapshotDiffRows(s.table(v1Table), s.table(v2Table)))
 
   // ---------------------------------------------------------------- q81
   /** Heavy hitters (ε-frequent items): every token whose TERM-occurrence
@@ -2321,33 +2305,14 @@ object TextOps {
     * per-(lang, word) frame: no join, no iteration, no shuffle beyond
     * the word-count group-by and the per-language rollup. Encoding cost
     * is |distinct (lang, word)|, not corpus positions — the same
-    * word-vocabulary economics as training. (A pipeline trains once and
-    * reuses the rules — [[saveBpeModel]]/[[loadBpeRules]] +
-    * [[bpeEncodeWith]] are that path, loaded-vs-inline equality
-    * spec-pinned; this registered query re-learns so the oracle can
-    * re-derive the identical rules data-dependently.) */
+    * word-vocabulary economics as training. (The query re-learns the
+    * rules so the oracle can re-derive them data-dependently.) */
   def q104BpeEncode(s: SparkSession, dir: String): DataFrame =
     bpeEncodeWith(s, dir, q100BpeMerges(s, dir).collect()
       .map(r => (r.getString(1), r.getString(2))).toSeq)
 
-  /** Persist the learned merge table — the IVF-persistence story for
-    * the tokenizer: training scans the corpus and iterates; a serving
-    * or re-encode job must not re-learn. The model is the q100 output
-    * verbatim (ordered rules + their pair counts). */
-  def saveBpeModel(s: SparkSession, dir: String, path: String): Unit =
-    q100BpeMerges(s, dir).write.mode("overwrite").parquet(path)
-
-  /** Ordered merge rules from a [[saveBpeModel]] table. */
-  def loadBpeRules(s: SparkSession, path: String): Seq[(String, String)] = {
-    import s.implicits._
-    s.read.parquet(path).orderBy($"it")
-      .select($"sym_a", $"sym_b").as[(String, String)].collect().toSeq
-  }
-
-  /** The encode pass against an explicit rule list — shared by q104
-    * (which learns inline) and the loaded-model serving arm (which must
-    * produce IDENTICAL accounting, spec-pinned). */
-  def bpeEncodeWith(s: SparkSession, dir: String,
+  /** q104's encode pass against an explicit rule list. */
+  private def bpeEncodeWith(s: SparkSession, dir: String,
       rules: Seq[(String, String)]): DataFrame = {
     import s.implicits._
     val lw = docs(s, dir)
@@ -2532,7 +2497,7 @@ object TextOps {
       .map(r => (r.getString(1), r.getString(2))).toSeq)
 
   /** Vocab + id-encode + decode-roundtrip against an explicit rule list
-    * (shared learn/apply split, as [[bpeEncodeWith]]). */
+    * (the learn/apply split of [[bpeEncodeWith]]). */
   def bpeVocabWith(s: SparkSession, dir: String,
       rules: Seq[(String, String)]): DataFrame = {
     import s.implicits._

@@ -34,9 +34,7 @@ object StreamingQualityGate {
   /** Train on `d`'s train split ([[Classifier.trainPerceptron]]),
     * calibrate θ there ([[Classifier.calibrateTheta]]), and persist the
     * frozen artifact: `<table>_w` (fb, w — 257 rows), `<table>_theta`
-    * (1 row), `<table>_ltheta` (lang, theta — q136's per-language
-    * operating points, [[gatedBatchPerLang]]'s freeze) and
-    * `<table>_rates` (lang, n_ref, n_admit, admit_permille —
+    * (1 row) and `<table>_rates` (lang, n_ref, n_admit, admit_permille —
     * the staleness reference, counted over the WHOLE reference corpus
     * with the gate's OWN predicate score > θ, the lmGate r12 tie
     * lesson). ONE text decode: the checkpointed feature frame feeds
@@ -55,11 +53,6 @@ object StreamingQualityGate {
     s.range(1).select(lit(theta).as("theta"))
       .write.mode("overwrite").format("parquet")
       .saveAsTable(table + "_theta")
-    // per-language operating points (q136's calibration, VERDICT r13
-    // #4) — language-cardinality-sized, same freeze
-    Classifier.calibrateThetaByLang(scores.filter($"db" >= 100))
-      .write.mode("overwrite").format("parquet")
-      .saveAsTable(table + "_ltheta")
     scores.groupBy($"lang")
       .agg(count(lit(1)).as("n_ref"),
         sum(($"score" > theta).cast("long")).as("n_admit"))
@@ -99,37 +92,6 @@ object StreamingQualityGate {
     Classifier.scoresOf(Classifier.perceptronPerDoc(batch), w)
       .select(col("doc_id"), col("lang"), col("score"),
         (col("score") > theta).as("admitted"))
-
-  /** The frozen per-language thetas as a driver map —
-    * language-cardinality-sized, the rates-table scale class. */
-  def loadPerLangThetas(s: SparkSession, table: String): Map[String, Long] =
-    s.table(table + "_ltheta").collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-
-  /** The PER-LANGUAGE gate (q136's calibration at the door, VERDICT r13
-    * #4): admitted = score > θ_lang. The lang→θ table enters as a map
-    * LITERAL (the wLookup idiom for a string key — no join in the
-    * per-batch plan). A language with no frozen per-lang θ falls back
-    * to the GLOBAL θ: the weights are language-agnostic, so an unseen
-    * language still gates at the calibrated global operating point —
-    * only the per-language refinement is unavailable (this diverges
-    * deliberately from q136's audit, whose no-train-rows rows use the
-    * calibrateTheta empty-split 0: the audit measures calibration on
-    * the training corpus, the door serves live traffic and should use
-    * the best operating point it HAS). Over a frozen-corpus replay the
-    * two rules agree — every language present at freeze has a θ. */
-  def gatedBatchPerLang(batch: DataFrame, w: Array[Long],
-      lthetas: Map[String, Long], theta: Long): DataFrame = {
-    val thetaL =
-      if (lthetas.isEmpty) lit(theta)
-      else coalesce(element_at(
-        map(lthetas.toSeq.flatMap { case (l, t) =>
-          Seq(lit(l), lit(t)) }: _*), col("lang")), lit(theta))
-    Classifier.scoresOf(Classifier.perceptronPerDoc(batch), w)
-      .withColumn("theta_l", thetaL)
-      .select(col("doc_id"), col("lang"), col("score"),
-        (col("score") > col("theta_l")).as("admitted"))
-  }
 
   /** STALENESS GATE for the frozen classifier
     * ([[StreamingLmGate.lmGateDrift]]'s role for the learned model):

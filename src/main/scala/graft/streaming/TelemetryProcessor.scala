@@ -1,11 +1,10 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
-import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
-import graft.transform.{AprsCalibration, AprsLineProtocol}
+import graft.transform.AprsCalibration
 
 /** The daemon's calibration operator (the one streaming implementation;
   * [[AprsCalibration]] is its batch oracle twin): the reference's process-global
@@ -63,8 +62,4 @@ object TelemetryProcessor {
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(process)(
         Encoders.kryo[Seq[Seq[Double]]], Encoders.row(outSchema))
   }
-
-  /** Stream-ready end-to-end: keyed calibration state → line protocol. */
-  def toLines(df: DataFrame, seqCol: String): DataFrame =
-    AprsLineProtocol.toLines(attach(df, seqCol), col(CalCol))
 }

@@ -216,7 +216,7 @@ class ClassifierSpec extends AnyFunSuite {
   test("quality gate: freeze, replay-exact serve, zero-drift audit, refusal") {
     import spark.implicits._
     val t = "qgate_spec_model"
-    Seq("_w", "_theta", "_ltheta", "_rates").foreach(sfx => cleanTable(t + sfx))
+    Seq("_w", "_theta", "_rates").foreach(sfx => cleanTable(t + sfx))
     val d = graft.util.Tables(spark, dir, "documents")
     graft.streaming.StreamingQualityGate.saveQualityModel(
       d.select($"doc_id", $"lang", $"text"), t)
@@ -281,7 +281,7 @@ class ClassifierSpec extends AnyFunSuite {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("qpipe").toString
     val model = "qpipe_model"
-    Seq("_w", "_theta", "_ltheta", "_rates").foreach(sfx => cleanTable(model + sfx))
+    Seq("_w", "_theta", "_rates").foreach(sfx => cleanTable(model + sfx))
     Seq("qpipe_base", "qpipe_recur").foreach(cleanTable)
     // the documented incremental-contract precondition (PublishSpec):
     // an append cannot unpublish, so a batch near-dup that would OUTRANK
@@ -422,42 +422,5 @@ class ClassifierSpec extends AnyFunSuite {
     out.collect { case ((_, "train"), (_, _, _, auc)) =>
       assert(auc == 0L)
     }
-  }
-
-  /** The per-language gate option (VERDICT r13 #4): the frozen _ltheta
-    * table replays q136's per-language predictions exactly at the door,
-    * and an unseen language falls back to the global θ. */
-  test("per-lang quality gate: replay matches q136; unseen lang uses global θ") {
-    import spark.implicits._
-    val t = "qgate_perlang_model"
-    Seq("_w", "_theta", "_ltheta", "_rates").foreach(sfx =>
-      cleanTable(t + sfx))
-    val d = graft.util.Tables(spark, dir, "documents")
-      .select($"doc_id", $"lang", $"text")
-    graft.streaming.StreamingQualityGate.saveQualityModel(d, t)
-    val (w, theta) = graft.streaming.StreamingQualityGate.loadModel(spark, t)
-    val lthetas = graft.streaming.StreamingQualityGate
-      .loadPerLangThetas(spark, t)
-    assert(lthetas.nonEmpty)
-    val gated = graft.streaming.StreamingQualityGate
-      .gatedBatchPerLang(d, w, lthetas, theta)
-      .groupBy($"lang").agg(sum($"admitted".cast("long")).as("n"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val audit = SparkEntry.queries("q136_perlang_theta")(spark, dir)
-      .groupBy($"lang").agg(sum($"n_pred_pos").as("n"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(gated == audit,
-      s"per-lang door admits ≠ q136 predictions\n$gated\n$audit")
-    // an unseen language has no per-lang θ: it gates at the global θ
-    val unseen = graft.streaming.StreamingQualityGate
-      .gatedBatchPerLang(d.limit(20)
-        .select($"doc_id", lit("xx").as("lang"), $"text"), w, lthetas, theta)
-    val viaGlobal = graft.streaming.StreamingQualityGate
-      .gatedBatch(d.limit(20)
-        .select($"doc_id", lit("xx").as("lang"), $"text"), w, theta)
-    assert(unseen.select("doc_id", "admitted").collect().map(_.toString)
-        .sorted.toSeq ==
-      viaGlobal.select("doc_id", "admitted").collect().map(_.toString)
-        .sorted.toSeq)
   }
 }

@@ -98,29 +98,6 @@ class PublishSpec extends AnyFunSuite {
     assert(e2.getMessage.contains("--incremental"))
   }
 
-  test("near-dup-aware pipeline drops exactly the non-keeper members") {
-    cleanTableLocation("clean_nd_pub")
-    val summary = graft.app.CleanPipeline
-      .runWithNearDup(spark, dir, "clean_nd_pub", buckets = 4)
-      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    val plain = graft.app.CleanPipeline.run(spark, dir, "clean_pub", buckets = 4)
-      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    // every stage count matches the plain run except kept/neardup, whose
-    // sum equals the plain kept count (the near-dup stage only re-labels)
-    plain.keys.filter(_._2 != "kept").foreach { k =>
-      assert(summary.getOrElse(k, 0L) == plain(k), s"stage $k")
-    }
-    plain.filter(_._1._2 == "kept").foreach { case ((lang, _), n) =>
-      val kept = summary.getOrElse((lang, "kept"), 0L)
-      val nd = summary.getOrElse((lang, "neardup"), 0L)
-      assert(kept + nd == n, s"lang $lang: $kept + $nd != $n")
-    }
-    assert(spark.table("clean_nd_pub").count() ==
-      summary.collect { case ((_, "kept"), n) => n }.sum)
-    // at least one near-dup member must actually drop on this corpus
-    assert(summary.keys.exists(_._2 == "neardup"), summary.toString)
-  }
-
   /** runFull (VERDICT r8 #7; strip rule per VERDICT r9 #1): the complete
     * curate CLI end to end at sf0.001 — stage accounting partitions the
     * corpus, the published table holds exactly the kept documents with
@@ -561,39 +538,5 @@ class PublishSpec extends AnyFunSuite {
       assert(rows.length == 1 && rows(0).getString(0) == "en" &&
         rows(0).getLong(1) == want)
     } finally saved.foreach { case (k, v) => c.set(k, v) }
-  }
-
-  /** VERDICT r4 #6: q80's production shape — diff two REAL published
-    * snapshots. Each side is ONE bucketed scan, the content-hash FULL
-    * OUTER join reuses the bucket distribution (no shuffle exchange
-    * below the join), and the classification matches the derived q80
-    * bit for bit. */
-  test("snapshot diff over two published versions: one scan per side, no join shuffle") {
-    import graft.operators.TextOps
-    val d = graft.util.Tables(spark, dir, "documents")
-    if (!spark.catalog.tableExists("snap_v1")) {
-      cleanTableLocation("snap_v1"); cleanTableLocation("snap_v2")
-      CorpusPublisher.publish(TextOps.snapshotV1(d), "snap_v1", buckets = 8)
-      CorpusPublisher.publish(TextOps.snapshotV2(d), "snap_v2", buckets = 8)
-    }
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val rows = TextOps.snapshotDiffRows(
-        spark.table("snap_v1"), spark.table("snap_v2"))
-      val p = plan(rows)
-      assert(!p.contains("Exchange hashpartitioning"),
-        s"snapshot diff join still shuffles:\n$p")
-      // exactly one scan per snapshot side
-      assert("Scan parquet".r.findAllIn(p).length == 2,
-        s"expected exactly 2 parquet scans:\n$p")
-      // the aggregated diff over the REAL tables equals the derived q80
-      val fromTables = TextOps.snapshotDiffTables(spark, "snap_v1", "snap_v2")
-        .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-      val derived = TextOps.q80SnapshotDiff(spark, dir)
-        .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-      assert(fromTables.sameElements(derived),
-        s"tables=${fromTables.mkString(",")} derived=${derived.mkString(",")}")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 }

@@ -618,35 +618,6 @@ class RangeJoinSpec extends AnyFunSuite {
     }
   }
 
-  /** IVF index persistence: the Lloyd fit is deterministic, so a saved
-    * index must round-trip exactly and the query path against the LOADED
-    * model must reproduce the inline-fit q44 output bit for bit — the
-    * build-once / query-many contract a production ANN index needs. */
-  test("q44 IVF index saves, loads, and queries identically") {
-    val tmp = java.nio.file.Files.createTempDirectory("ivfidx").toString
-    Similarity.saveIvfIndex(spark, dir, s"$tmp/ivf")
-    val loaded = Similarity.loadIvfIndex(spark, s"$tmp/ivf")
-    assert(loaded.length == 16)
-    loaded.foreach { case (e, nrm) =>
-      assert(e.length == 64 && nrm > 0.0)
-    }
-    val inline = Similarity.q44AnnIvfRecall(spark, dir).collect()
-      .map(_.toString).toSeq
-    val viaIndex = Similarity.ivfRecallWith(spark, dir, loaded).collect()
-      .map(_.toString).toSeq
-    assert(viaIndex == inline)
-    // the production query-many path (ANN top-k, no recall audit arm)
-    // is also identical loaded vs inline-fit, and its per-query hit
-    // counts agree with the q44 report's n_hit denominator arm
-    val qInline = Similarity.ivfQuery(spark, dir,
-      Similarity.loadIvfIndex(spark, s"$tmp/ivf"))
-    val qLoaded = Similarity.ivfQuery(spark, dir, loaded)
-    assert(qLoaded.collect().map(_.toString).toSeq ==
-      qInline.collect().map(_.toString).toSeq)
-    assert(qLoaded.groupBy("qid").count().collect()
-      .forall(_.getLong(1) <= 5))
-  }
-
   /** VERDICT r5 #2: multiprobe closes IVF's recall gap. Probing the
     * nprobe nearest cells yields a candidate SUPERSET of the single-probe
     * arm, and top-5-of-a-superset can only gain exact-top-5 members
@@ -666,14 +637,6 @@ class RangeJoinSpec extends AnyFunSuite {
     }
     val meanRecall = multi.values.map(_._2).sum / (5.0 * multi.size)
     assert(meanRecall >= 0.9, s"mean recall $meanRecall < 0.9")
-    // the serving arm accepts nprobe too: top-k against the probed cells
-    val tmp = java.nio.file.Files.createTempDirectory("ivfmp").toString
-    Similarity.saveIvfIndex(spark, dir, s"$tmp/ivf")
-    val served = Similarity.ivfQuery(spark, dir,
-      Similarity.loadIvfIndex(spark, s"$tmp/ivf"), k = 5,
-      nprobe = Similarity.MultiprobeNprobe)
-    assert(served.groupBy("qid").count().collect()
-      .forall(_.getLong(1) <= 5))
   }
 
   /** q111 (VERDICT r7 #4): the compressed IVF-PQ arm must clear the
@@ -773,108 +736,6 @@ class RangeJoinSpec extends AnyFunSuite {
       s"planted tie pair missing from qid 0 candidates: $q0")
     assert(q0(1)._3 == q0(0)._3 + 1,
       s"tie not broken adjacently by vec_id: $q0")
-  }
-
-  /** Perceptual descriptor index (VERDICT r11 #5): the saved index's
-    * near-dup sweep must return EXACTLY the inline q117 pairs — the
-    * multiprobe value-grid guarantees every cos ≥ 0.999 pair a shared
-    * cell (per-dim normalized delta ≤ √(2·(1−0.999)) ≈ 0.045 < w/2 =
-    * 0.0625), and verification is the shared exact arithmetic — and the
-    * persisted descriptors must round-trip bit-exactly (saved ≡ inline:
-    * decode is deterministic per row). */
-  test("perceptual index sweep equals inline q117; descriptors persist exactly") {
-    import graft.operators.Multimodal
-    val idx = java.nio.file.Files.createTempDirectory("pidx").toString
-    Multimodal.savePerceptualIndex(spark, Multimodal.assets(spark, dir), idx)
-    // saved-vs-inline descriptor equality
-    val saved = spark.read.parquet(s"$idx/desc")
-      .collect().map(_.toString).sorted.toSeq
-    val inline = Multimodal.quantizedDescriptors(
-        Multimodal.decodeFeatures(spark, Multimodal.assets(spark, dir)))
-      .select("doc_id", "decoder", "p", "t", "nrm")
-      .collect().map(_.toString).sorted.toSeq
-    assert(saved == inline, "persisted descriptors diverge from a fresh decode")
-    // blocking meta: PerceptualGridDims dims per family
-    val meta = Multimodal.loadPerceptualMeta(spark, idx)
-    assert(meta.nonEmpty &&
-      meta.values.forall(_.length == Multimodal.PerceptualGridDims), meta)
-    // index sweep ≡ inline q117 pair for pair (incl. the cosine value)
-    val got = Multimodal.perceptualPairsFromIndex(spark, idx)
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-        r.getDouble(3))).toSet
-    val inlinePairs = Multimodal.q117PerceptualDedup(spark, dir)
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-        r.getDouble(3))).toSet
-    assert(inlinePairs.nonEmpty, "fixture corpus must carry q117 pairs")
-    assert(got == inlinePairs,
-      s"index sweep ≠ inline q117: missing ${inlinePairs -- got}, " +
-        s"extra ${got -- inlinePairs}")
-  }
-
-  /** The serving path: an arriving batch probes the saved descriptor
-    * index by blocking key and exact-verifies — a re-sent payload under
-    * a new id must match its indexed original (descriptor identical ⇒
-    * same keys, cosine 1); a novel payload with an alien byte histogram
-    * must match nothing. Batch work only — no corpus re-decode. */
-  test("perceptual index serves re-sent payloads and rejects novel ones") {
-    import spark.implicits._
-    import graft.operators.Multimodal
-    val idx = java.nio.file.Files.createTempDirectory("pidx_serve").toString
-    Multimodal.savePerceptualIndex(spark, Multimodal.assets(spark, dir), idx)
-    val origs = Multimodal.assets(spark, dir)
-      .filter(org.apache.spark.sql.functions.col("doc_id") < 3)
-      .select("doc_id", "payload").collect()
-      .map(r => r.getLong(0) -> r.getAs[Array[Byte]](1)).toMap
-    assert(origs.size == 3)
-    val novel = ("~!^" * 40).getBytes("UTF-8") // alien byte histogram
-    val batch = origs.map { case (id, p) => (id + 900000L, p) }.toSeq ++
-      Seq((999999L, novel))
-    val batchDf = batch.toDF("doc_id", "payload")
-    val matches = Multimodal.servePerceptualMatches(spark, idx, batchDf)
-      .collect().map(r => (r.getLong(1), r.getLong(2))).toSet
-    origs.keys.foreach { id =>
-      assert(matches.contains((id + 900000L, id)),
-        s"re-sent payload of $id did not match its indexed original")
-    }
-    assert(!matches.exists(_._1 == 999999L),
-      s"novel payload matched: ${matches.filter(_._1 == 999999L)}")
-  }
-
-  /** Stub/real family isolation in perceptual SERVING (VERDICT r14 #7):
-    * the blocking meta and the candidate join are both keyed per
-    * decoder family, so a stub-histogram descriptor must never pair
-    * with a real-decode descriptor — a q139-flagged corpus (stub share
-    * breached) can't silently cross-match into a real-image index.
-    * Planted: a codec-video payload (sniffs video, decode FAILS → stub)
-    * served against an index of REAL images returns nothing, while a
-    * re-sent image proves the same index is alive. */
-  test("perceptual serving: stub-family query never matches a real-image index") {
-    import spark.implicits._
-    import graft.operators.Multimodal
-    def pngOf(seed: Int): Array[Byte] = {
-      val img = new java.awt.image.BufferedImage(4, 4,
-        java.awt.image.BufferedImage.TYPE_INT_RGB)
-      for (x <- 0 until 4; y <- 0 until 4)
-        img.setRGB(x, y, (seed * 2654435761L + x * 131 + y * 31).toInt)
-      val baos = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(img, "png", baos)
-      baos.toByteArray
-    }
-    val idx = java.nio.file.Files.createTempDirectory("pidx_fam").toString
-    Multimodal.savePerceptualIndex(spark,
-      Seq((1L, pngOf(1)), (2L, pngOf(2)), (3L, pngOf(3)))
-        .toDF("doc_id", "payload"), idx)
-    val codec = "GIF89a-truncated".getBytes("ISO-8859-1")
-    val stubHit = Multimodal.servePerceptualMatches(spark, idx,
-      Seq((50L, codec)).toDF("doc_id", "payload")).collect()
-    assert(stubHit.isEmpty,
-      s"stub-family query crossed into the image index: ${stubHit.toSeq}")
-    // the emptiness above is family isolation, not a dead index
-    val alive = Multimodal.servePerceptualMatches(spark, idx,
-        Seq((60L, pngOf(1))).toDF("doc_id", "payload")).collect()
-      .map(r => (r.getLong(1), r.getLong(2))).toSet
-    assert(alive.contains((60L, 1L)),
-      s"re-sent image must match its indexed original: $alive")
   }
 
   /** q112 planted-free exactness: the per-subspace distortion report
@@ -1088,38 +949,6 @@ class RangeJoinSpec extends AnyFunSuite {
     assert(real.forall(_._2.length == Similarity.MmrK))
   }
 
-  /** mmrServeQuery — q129's loaded twin: the saved-index serve pool fed
-    * through the same greedy. Pins the composition contract: MMR's
-    * rank-1 is the serve path's top hit (step 1 is pure relevance),
-    * every selection comes from the served pool, each standing query
-    * gets exactly MmrK rows, and the r13 qids restriction composes
-    * (sub-batch output ≡ the filtered full serve — per-qid greedy). */
-  test("MMR serving from the saved PQ index composes with the qid restriction") {
-    import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("mmrserve").toString
-    Similarity.savePqIndex(spark, dir, s"$tmp/idx")
-    val pool = Similarity.pqServeQuery(spark, dir, s"$tmp/idx",
-        k = Similarity.MmrPool).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    val full = Similarity.mmrServeQuery(spark, dir, s"$tmp/idx").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    val byQ = full.groupBy(_._1)
-    assert(byQ.keySet == pool.map(_._1).toSet &&
-      byQ.values.forall(_.length == Similarity.MmrK),
-      s"every standing query diversifies to MmrK rows: ${byQ.view.mapValues(_.length).toMap}")
-    val top1 = pool.filter(_._3 == 1L).map(x => (x._1, x._2)).toSet
-    assert(full.filter(_._3 == 1L).map(x => (x._1, x._2)).toSet == top1,
-      "MMR rank 1 must be the serve path's top hit")
-    val poolSet = pool.map(x => (x._1, x._2)).toSet
-    assert(full.forall(x => poolSet((x._1, x._2))),
-      "every MMR selection must come from the served pool")
-    val sub = Similarity.mmrServeQuery(spark, dir, s"$tmp/idx",
-        qids = Some(Seq(2L, 7L))).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    assert(sub == full.filter(x => Set(2L, 7L)(x._1)),
-      "sub-batch MMR serve must equal the filtered full serve")
-  }
-
   /** Drift-gate AUTOMATION (VERDICT r12 #5): `audit --fail-over <p>`
     * turns the distortion report into a cron-consumable verdict. Exit
     * contract: 0 = within threshold, 3 = drifted (re-freeze), 2 = usage,
@@ -1187,7 +1016,7 @@ class RangeJoinSpec extends AnyFunSuite {
     val name = "txtgate"
     Seq("_bm25", "_bm25_df", "_bm25_stats", "_bm25_frozen_stats",
       "_bm25_frozen_df", "_lm_cells", "_lm_ctx", "_lm_rates",
-      "_lm_cuts", "_q_w", "_q_theta", "_q_ltheta", "_q_rates")
+      "_lm_cuts", "_q_w", "_q_theta", "_q_rates")
       .foreach(sfx => clean(name + sfx))
     assert(graft.app.TextIndexCli.run(spark, Seq("build", dir, name)) == 0)
     // FULL frozen-corpus replay batch: every signal exactly zero (a
@@ -1246,7 +1075,7 @@ class RangeJoinSpec extends AnyFunSuite {
     val name = "txtcli"
     Seq("_bm25", "_bm25_df", "_bm25_stats", "_bm25_frozen_stats",
       "_bm25_frozen_df", "_lm_cells", "_lm_ctx", "_lm_rates",
-      "_lm_cuts", "_q_w", "_q_theta", "_q_ltheta", "_q_rates")
+      "_lm_cuts", "_q_w", "_q_theta", "_q_rates")
       .foreach(sfx => clean(name + sfx))
     graft.app.TextIndexCli.run(spark, Seq("build", dir, name))
     val n0 = spark.table(s"${name}_bm25").count()

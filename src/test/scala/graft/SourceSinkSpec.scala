@@ -13,6 +13,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import graft.sinks.InfluxLineSink
 import graft.sources.{AprsIsMicroBatchStream, AprsIsPartition, AprsIsSource, SeqOffset}
 import graft.streaming.TelemetryProcessor
+import graft.transform.AprsLineProtocol
 import org.apache.spark.sql.functions._
 
 /** End-to-end source + sink tests against local stub endpoints:
@@ -84,8 +85,10 @@ class SourceSinkSpec extends AnyFunSuite {
       assert(login == s"user nocall pass ${AprsIsSource.passcode("nocall")} vers aprs2influxdbspark 0.1.0")
       // end-to-end: source rows → calibration → line protocol
       // (telemetry-message and unknown "telemetry" emit nothing)
-      val lines = TelemetryProcessor.toLines(rows(), "_seq")
-        .filter($"line".isNotNull).select($"line").as[String].collect()
+      val lines = AprsLineProtocol.lines(
+          TelemetryProcessor.attach(rows(), "_seq"),
+          col(TelemetryProcessor.CalCol))
+        .as[String].collect()
       assert(lines.length == 2)
       assert(lines.exists(_.startsWith("packet,format=uncompressed ")))
       assert(lines.exists(_.startsWith("packet,format=beacon ")))

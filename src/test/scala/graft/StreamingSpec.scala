@@ -7,6 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model.AprsSchema
 import graft.streaming.TelemetryProcessor
+import graft.transform.AprsLineProtocol
 
 /** Structured Streaming specs. The APRS one: fixture packets arrive as a
   * file stream in two micro-batches (the telemetry-message calibration for
@@ -96,7 +97,9 @@ class StreamingSpec extends AnyFunSuite {
       got: java.util.Queue[(Long, Option[String])]) = {
     val stream = session.readStream.schema(AprsSchema.schema.add("_idx", "long"))
       .option("maxFilesPerTrigger", 1).json(dir.toString)
-    TelemetryProcessor.toLines(stream, "_idx").select($"_idx", $"line")
+    AprsLineProtocol.toLines(TelemetryProcessor.attach(stream, "_idx"),
+        col(TelemetryProcessor.CalCol))
+      .select($"_idx", $"line")
       .writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
         batch.collect().foreach(r => got.add(r.getLong(0) -> Option(r.getString(1))))

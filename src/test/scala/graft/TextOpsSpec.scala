@@ -860,19 +860,6 @@ class TextOpsSpec extends AnyFunSuite {
     }
   }
 
-  /** q133 with the saved+loaded model equals inline (the q104
-    * loaded-vs-inline discipline, extended to the id layer). */
-  test("q133: vocab/ids from the saved+loaded model equal inline") {
-    val path = java.nio.file.Files.createTempDirectory("bpe_vocab_model")
-      .resolve("model").toString
-    TextOps.saveBpeModel(spark, dir, path)
-    val loaded = TextOps.bpeVocabWith(spark, dir,
-      TextOps.loadBpeRules(spark, path)).collect().map(_.toString).toSeq
-    val inline = TextOps.q133BpeVocab(spark, dir)
-      .collect().map(_.toString).toSeq
-    assert(loaded == inline)
-  }
-
   /** q104 on the real corpus: 12 learned merges must strictly compress
     * every language (the corpus shares high-frequency character pairs). */
   test("q104: learned merges compress the real corpus") {
@@ -883,22 +870,6 @@ class TextOpsSpec extends AnyFunSuite {
         s"${r.getString(0)}: no compression (${r.getLong(3)} vs ${r.getLong(2)})")
       assert(r.getDouble(4) > 0.0 && r.getDouble(4) < 1.0, r)
     }
-  }
-
-  /** The persisted BPE model round-trips: encode with the LOADED rules
-    * must equal the inline-learned q104 bit-for-bit (the IVF
-    * loaded-vs-inline discipline applied to the tokenizer). */
-  test("q104: encoding with the saved+loaded model equals inline") {
-    val path = java.nio.file.Files.createTempDirectory("bpe_model")
-      .resolve("model").toString
-    TextOps.saveBpeModel(spark, dir, path)
-    val rules = TextOps.loadBpeRules(spark, path)
-    assert(rules.nonEmpty && rules.size <= TextOps.BpeMerges)
-    val loaded = TextOps.bpeEncodeWith(spark, dir, rules)
-      .collect().map(_.toString).toSeq
-    val inline = TextOps.q104BpeEncode(spark, dir)
-      .collect().map(_.toString).toSeq
-    assert(loaded == inline)
   }
 
   /** The q118 planted distinguishing case (VERDICT r9 #4): the bigram LM

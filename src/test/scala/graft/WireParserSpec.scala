@@ -239,3 +239,36 @@ class WireParserSpec extends AnyFunSuite {
     assert(AprsWireParser.parse("A>B:!499").isEmpty) // truncated position → drop
   }
 }
+
+object WireParserSpec {
+  /** The raw frames the tests above parse, well-formed and malformed:
+    * the seed corpus of [[AprsIsReaderPropertySpec]]'s mutations. */
+  val frames: Seq[String] = Seq(
+    "N0CALL>APRS,WIDE1-1,WIDE2-2:!4903.50N/07201.75W-hi",
+    "N0CALL>APRS:!4903.50N/07201.75W-Test comment",
+    "N0CALL>APRS:=4903.50N/07201.75W>088/036Hello",
+    "N0CALL>APRS:!4903.50N/07201.75W-PHG5132/A=001000rest",
+    "N0CALL>APRS:!4903.5 N/07201.7 W-",
+    "N0CALL>APRS:@092345z4903.50N/07201.75W-",
+    "N0CALL>APRS:@250000z4903.50N/07201.75W-",
+    "W1AW>APRS:!/5L!!<*e7>7P[comment",
+    "N0CALL>S32UVT:`(_fn\"Oj/]test",
+    "KB1LQD>APRS,TCPIP*:>092345zNet tonight",
+    "A1CALL>APRS::KB1LQD   :hello there{12",
+    "A1CALL>APRS::KB1LQD   :ack12",
+    "K9ABC>APRS::BLN3     :Net tonight 8pm",
+    "KB1LQD>APRS::KB1LQD   :EQNS.0,5.2,3,0,0.1,0,0,1,0,0,1,0,0,1,0",
+    "N0CALL>APRS:!4903.50N/07201.75W_220/004g005t077r000p000P000h50b09900wRSW",
+    "N0CALL>APRS:!/5L!!<*e7_7P[g005t077",
+    "N0CALL>APRS:!4903.50N/07201.75W-hello !W36! world",
+    "N0CALL>T7SYWX:`(_fn\"Oj/]comment",
+    "N0CALL>APRS:!4903.50N/07201.75W-before|!&\"b!!\"a!#!$!%|after",
+    "KB1LQD>APRS::KB1LQD   :EQNS.1,2,3,4",
+    "KB1LQD>APRS::KB1LQD   :EQNS.0,1,0,0,1,0,0,1,0,0,1,0,0,1,0,9",
+    "KB1LQD>APRS::KB1LQD   :EQNS.a,b,c",
+    "KB1LQD>APRS:T#005,199,000,255,073,123,01101001",
+    "K1XYZ>APRS:;REPEATER *092345z4903.50N/07201.75W-147.09MHz",
+    "CW0003>APRS:_10090233c220s004g005t077r000p000P000h50b09900",
+    "DIGI-1>BEACON:Mt Beacon digi",
+    "", "no envelope here", ">:", "A>B:", "A>B:!499")
+}
